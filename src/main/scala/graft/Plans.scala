@@ -6,6 +6,11 @@ import java.nio.file.{Files, Paths}
   * PLANS.md. Regenerate with
   * `sbt "runMain graft.Plans /root/testdata/sf0.01 PLANS.md"` after plan
   * changes; the interesting properties are called out in the header.
+  *
+  * With query names after the two paths, the second path is a directory
+  * and each named registry query's plan goes to `<dir>/<name>.txt` — the
+  * per-change `plans/<change>/` dumps:
+  * `sbt "runMain graft.Plans <sf-dir> plans/<change> q_bm25_stored"`.
   */
 object Plans {
   private[graft] val Names = Seq(
@@ -93,15 +98,16 @@ object Plans {
     // Audit view: trailing/mid-pipeline pins (Pins.pin) are inlined so
     // the dump shows the full join tree a localCheckpoint would truncate
     // to a LogicalRDD scan — same view PlanAuditSpec asserts over.
+    def plan(n: String) = SparkEntry.queries(n)(spark, sfDir).queryExecution
+      .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    val only = args.drop(2)
     operators.Pins.withAuditView {
-      Names.foreach { n =>
-        val df = SparkEntry.queries(n)(spark, sfDir)
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-        sb.append(s"\n## $n\n\n```\n$plan```\n")
-      }
+      if (only.nonEmpty) {
+        Files.createDirectories(Paths.get(out))
+        only.foreach(n => Files.writeString(Paths.get(out, s"$n.txt"), plan(n)))
+      } else Names.foreach(n => sb.append(s"\n## $n\n\n```\n${plan(n)}```\n"))
     }
-    Files.writeString(Paths.get(out), sb.toString)
+    if (only.isEmpty) Files.writeString(Paths.get(out), sb.toString)
     println(s"wrote $out")
     spark.stop()
   }

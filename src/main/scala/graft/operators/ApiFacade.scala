@@ -116,11 +116,13 @@ final case class ApiFacade(
       // not-found — Mongo's FindOne surfaces ErrNoDocuments (mongo.go:
       // 90-119). A point lookup is inherently an action, so this endpoint
       // executes eagerly (one pushed-down point predicate) to keep that
-      // contract; the other endpoints stay lazy.
+      // contract, and serves the rows it fetched rather than running the
+      // lookup again; the other endpoints stay lazy.
       case None => bad()
       case Some(service) =>
         val hit = service.get(req.id, UniqueAttrs)
-        if (hit.isEmpty) bad() else ok(hit)
+        val rows = hit.collect()
+        if (rows.isEmpty) bad() else ok(local(hit, rows))
     }
 
   def getAll(req: GetAllRequest): ApiResponse =
@@ -245,6 +247,13 @@ final case class ApiFacade(
     * the pipeline's storage/deserialization failures (→ 206 partial if
     * anything else made it); a clean drain is a 200 even when empty
     * (chooseHTTPStatusCode: no errors → 200).
+    *
+    * The publish plan runs ONCE: its rows are fetched (the response
+    * renders them all anyway, so the driver holds nothing it would not
+    * have held), counted for the status, and served in fetch order as
+    * the response frame; the indexed slice is counted in one more job.
+    * These are the reference's job counters (resubmitter_job.go:28-58:
+    * indexed / fetched-deserialized-publishable).
     */
   private def runResubmit(collection: String)(
       mode: Resubmitter => ResubmitRun): (Int, String, Option[DataFrame]) =
@@ -255,14 +264,13 @@ final case class ApiFacade(
       case Some(r) =>
         try {
           val run = mode(r)
-          val counts = run.summary.head()
-          val indexed = counts.getLong(0)
-          val published = counts.getLong(1)
+          val rows = run.publish.collect()
+          val published = rows.length.toLong
           val (s, m) = resubmitStatus(
             indexerErrors = 0,
-            pipelineErrors = indexed - published,
+            pipelineErrors = run.indexed.count() - published,
             published = published)
-          (s, m, Some(run.publish))
+          (s, m, Some(local(run.publish, rows)))
         } catch {
           case _: IllegalArgumentException =>
             val (s, m) = resubmitStatus(indexerErrors = 1, pipelineErrors = 0, published = 0)
@@ -273,6 +281,12 @@ final case class ApiFacade(
   private def pagination(limit: Option[String], offset: Option[String]): (Int, Int) = (
     limit.flatMap(_.toIntOption).filter(_ > 0).getOrElse(DefaultLimit),
     offset.flatMap(_.toIntOption).filter(_ >= 0).getOrElse(DefaultOffset))
+
+  /** Already-fetched rows of `df` as a frame of the same schema and row
+    * order — a local relation, so serving it re-runs nothing.
+    */
+  private def local(df: DataFrame, rows: Array[org.apache.spark.sql.Row]): DataFrame =
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
 
   private def ok(df: DataFrame) = ApiResponse(200, OkMessage, Some(df))
   private def bad() = ApiResponse(400, OnBadRequestMessage, None)

@@ -7,6 +7,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graft.LocalJson
 
 /** A live HTTP listener over [[ApiFacade]] — the reference's two gin
   * servers rebuilt on the JDK's built-in `com.sun.net.httpserver` (the
@@ -69,7 +70,7 @@ import org.apache.spark.sql.DataFrame
   *     caller/launcher, not per-instance (documented limitation);
   *   - graceful drain: [[stop]] delays up to `drainSec` for in-flight
   *     exchanges, the analog of the reference's waitGroup-then-5s
-  *     shutdown (server.go:180-196).
+  *     shutdown (server.go:180-196), then ends the worker pool.
   *
   * Port 0 binds an ephemeral port ([[boundPort]] reports it) so specs can
   * run hermetically in parallel.
@@ -88,12 +89,27 @@ final class ApiServer(
     HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
   server.createContext("/", (exchange: HttpExchange) => handle(exchange))
   // one worker pool, not a thread per request; the facade itself is
-  // thread-safe (immutable routing maps over lazy frames)
-  server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4))
+  // thread-safe (immutable routing maps over lazy frames). The server
+  // never shuts down an executor it was handed, so [[stop]] does.
+  private val workers = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    java.util.concurrent.Executors.newFixedThreadPool(4, (r: Runnable) =>
+      new Thread(r, s"${WorkerPrefix}${boundPort}-${n.incrementAndGet()}"))
+  }
+  server.setExecutor(workers)
 
   def start(): Unit = server.start()
   def boundPort: Int = server.getAddress.getPort
-  def stop(drainSec: Int = 5): Unit = server.stop(drainSec)
+
+  /** Stop accepting, drain in-flight exchanges for up to `drainSec`, then
+    * end the worker pool: its threads are non-daemon, so a stopped server
+    * must not leave them running.
+    */
+  def stop(drainSec: Int = 5): Unit = {
+    server.stop(drainSec)
+    workers.shutdownNow()
+    workers.awaitTermination(5, java.util.concurrent.TimeUnit.SECONDS)
+  }
 
   private def handle(x: HttpExchange): Unit = {
     // Set (conservatively, just before sendResponseHeaders) so a crash
@@ -259,16 +275,6 @@ final class ApiServer(
             intFieldOr(b, "k_rrf", 60))
     }
 
-  private def render(message: String, data: Option[DataFrame]): String = {
-    val m = Json.writeValueAsString(message)
-    data match {
-      case None => s"""{"message":$m}"""
-      case Some(df) =>
-        // bounded by construction: a ≤limit-row page or a resubmit plan
-        s"""{"message":$m,"data":[${df.toJSON.collect().mkString(",")}]}"""
-    }
-  }
-
   private def body(x: HttpExchange): Option[JsonNode] =
     try {
       // bounded read: a body past MaxBodyBytes is a bind failure (400),
@@ -290,6 +296,25 @@ object ApiServer {
   case object Resubmitter extends Role
 
   private[operators] val Json = new ObjectMapper()
+
+  /** The response body: `{"message": …, "data": [row-objects…]}`, rows
+    * through Spark's own JSON encoder — on the driver when the frame holds
+    * rows the facade already fetched (a local relation), so serving them
+    * runs no job.
+    */
+  private[operators] def render(message: String, data: Option[DataFrame]): String = {
+    val m = Json.writeValueAsString(message)
+    data match {
+      case None => s"""{"message":$m}"""
+      case Some(df) =>
+        // bounded by construction: a ≤limit-row page or a resubmit plan
+        val rows = LocalJson.rows(df).getOrElse(df.toJSON.collect().toSeq)
+        s"""{"message":$m,"data":[${rows.mkString(",")}]}"""
+    }
+  }
+
+  /** Worker thread names: this prefix, the bound port, the thread's index. */
+  private[operators] val WorkerPrefix = "api-server-"
 
   // serializes java Maps with keys sorted — the canonicalizer's engine
   private val SortedJson = {

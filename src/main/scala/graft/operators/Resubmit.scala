@@ -2,7 +2,6 @@ package graft.operators
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.DataFrame
 
 /** The reference resubmitter's three composed entry modes — by explicit
@@ -82,19 +81,11 @@ final case class Resubmitter(
 /** One composed resubmission: the queried index slice and the
   * publish-ready plan (repackaged attributes, keyed rows partitioned by
   * ordering key and sorted by publish position, keyless rows salted).
-  * Both lazy; `summary` aggregates the reference's job counters
-  * (resubmitter_job.go:28-58: indexed / fetched-deserialized-publishable)
-  * in two count-only jobs — the facade's status rule consumes it.
+  * Both lazy. Their row counts are the reference's job counters
+  * (resubmitter_job.go:28-58: indexed / fetched-deserialized-publishable):
+  * `indexed` rows that never reach `publish` failed the
+  * fetch/deserialize stage — the reference would tag them
+  * storage/deserialization errors, and the facade's status rule counts
+  * them as pipeline errors.
   */
-final case class ResubmitRun(indexed: DataFrame, publish: DataFrame) {
-
-  /** One row: `n_indexed` (index rows the query matched) and `n_publish`
-    * (records that joined to a stored blob record and entered the publish
-    * plan). `n_indexed - n_publish` rows failed the fetch/deserialize
-    * stage — the reference would tag them storage/deserialization errors.
-    * crossJoin of two broadcast 1-row aggregates, the house pattern.
-    */
-  def summary: DataFrame =
-    indexed.agg(count(lit(1)).as("n_indexed"))
-      .crossJoin(publish.agg(count(lit(1)).as("n_publish")))
-}
+final case class ResubmitRun(indexed: DataFrame, publish: DataFrame)

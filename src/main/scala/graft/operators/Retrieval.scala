@@ -19,22 +19,41 @@ import org.apache.spark.sql.functions._
   * pages, never corpus-sized frames — so the listener's bounded-collect
   * rendering contract holds.
   *
-  * The ANN routes inherit [[Similarity.ivfTopKAssigned]]'s enforced
-  * small-probe contract: an oversized probe batch (over the store's
-  * `maxBroadcastProbes`) silently falls back to the valved sweep join
+  * A request runs each of its subplans once. The ANN and PQ routes (and
+  * the semantic half of hybrid) fetch their probe side in one bounded
+  * job and broadcast the fetched rows ([[Similarity.ivfTopKAssigned]]'s
+  * enforced small-probe contract): an oversized probe batch (over the
+  * store's `maxBroadcastProbes`) falls back to the valved sweep join
   * with identical results — a client cannot OOM the serve by sending a
   * huge id list; on top of that, id lists and vector batches past the
-  * store's `maxQueryIds` bind-fail at the HTTP boundary.
+  * store's `maxQueryIds` bind-fail at the HTTP boundary. The BM25 and
+  * phrase routes score against the collection's corpus statistics as
+  * literals ([[TextAnalysis.Bm25Stats]]): the stored sidecar's, or for a
+  * store without one, doclen folded once per service, not per request.
   */
 final case class RetrievalService(
     bm25: Map[String, (DataFrame, DataFrame)] = Map.empty,
     ann: Map[String, RetrievalService.AnnStore] = Map.empty,
     phrase: Map[String, (DataFrame, DataFrame)] = Map.empty,
     pq: Map[String, RetrievalService.PqStore] = Map.empty,
-    bm25Stats: Map[String, DataFrame] = Map.empty,
-    phraseStats: Map[String, DataFrame] = Map.empty) {
+    bm25Stats: Map[String, TextAnalysis.Bm25Stats] = Map.empty,
+    phraseStats: Map[String, TextAnalysis.Bm25Stats] = Map.empty) {
   import ApiFacade.{ApiResponse, OkMessage, OnBadRequestMessage}
   import RetrievalService.{MaxK, MaxRerank, OnNoStoreMessage}
+
+  // Corpus statistics per served collection: the wired sidecar value, or
+  // — for a store without one — folded from its doclen ONCE, on first
+  // use, never per request (a service's stores are immutable for its
+  // lifetime, the memo argument).
+  private lazy val bm25St = resolveStats(bm25, bm25Stats)
+  private lazy val phraseSt = resolveStats(phrase, phraseStats)
+
+  private def resolveStats(
+      stores: Map[String, (DataFrame, DataFrame)],
+      wired: Map[String, TextAnalysis.Bm25Stats]) =
+    stores.map { case (n, (_, doclen)) =>
+      n -> wired.getOrElse(n, TextAnalysis.Bm25Stats.of(doclen))
+    }
 
   /** `POST /search/:coll {"terms": […], "k": n}` — BM25 top-k from the
     * stored postings (term buckets prune the partition scan; nothing
@@ -50,7 +69,7 @@ final case class RetrievalService(
         case (Some(ts), Some(kv)) if ts.nonEmpty && kv > 0 && kv <= MaxK =>
           ApiResponse(200, OkMessage,
             Some(TextAnalysis.bm25TopKFromIndex(postings, doclen, ts, kv,
-              stats = bm25Stats.get(coll))))
+              stats = bm25St.get(coll))))
         case _ => ApiResponse(400, OnBadRequestMessage, None)
       }
     }
@@ -80,7 +99,7 @@ final case class RetrievalService(
           ApiResponse(200, OkMessage,
             Some(TextAnalysis.bm25PerQueryFromIndex(
               postings, doclen, qs.toDF("query_id", "terms"), kv,
-              stats = bm25Stats.get(coll))))
+              stats = bm25St.get(coll))))
         case _ => ApiResponse(400, OnBadRequestMessage, None)
       }
     }
@@ -101,7 +120,7 @@ final case class RetrievalService(
         case (Some(ph), Some(kv)) if ph.size >= 2 && kv > 0 && kv <= MaxK =>
           ApiResponse(200, OkMessage,
             Some(TextAnalysis.phraseTopKFromIndex(postingsPos, doclen, ph, kv,
-              stats = phraseStats.get(coll))))
+              stats = phraseSt.get(coll))))
         case _ => ApiResponse(400, OnBadRequestMessage, None)
       }
     }
@@ -267,7 +286,7 @@ final case class RetrievalService(
                 (queryId.isDefined != vector.isDefined) &&
                 vector.forall(_.length == st.cents(0).length) =>
             val lex = TextAnalysis.bm25TopKFromIndex(postings, doclen, ts, kv,
-              stats = bm25Stats.get(coll))
+              stats = bm25St.get(coll))
               .withColumn("rank", row_number().over(
                 Window.orderBy(col("score").desc, col("doc_id"))).cast("long"))
               .select("doc_id", "rank")

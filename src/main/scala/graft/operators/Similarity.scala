@@ -1,8 +1,13 @@
 package graft.operators
 
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.FutureAction
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -328,17 +333,58 @@ object Similarity {
     bestCell(emb, cents).getField("i")
 
   /** Enforcement for the broadcast query-serving shape's SMALL-PROBE
-    * contract (previously documentation-only: a corpus-sized `queryPred`
-    * under the default `broadcastQueries = true` silently force-broadcast
-    * the corpus — the hint bypasses Spark's size check, the same failure
-    * mode as hinting an SF-scaling table). Counts the probe side with an
-    * early-terminating `limit(cap + 1)` scan — O(cap) work, never a full
-    * corpus pass — and returns whether the broadcast contract holds; the
-    * callers fall back to the shuffled kNN-join sweep when it doesn't,
-    * which is result-identical (same equi-join) and scale-safe.
+    * contract (a corpus-sized `queryPred` under the default
+    * `broadcastQueries = true` would otherwise force-broadcast the corpus
+    * — the hint bypasses Spark's size check, the same failure mode as
+    * hinting an SF-scaling table), fused with the fetch the broadcast
+    * needs anyway: ONE job over the probe side, each task returning at
+    * most `cap + 1` post-explode rows. Within the cap the rows come back
+    * as a local relation the callers broadcast, with the distinct probed
+    * `cell`s read off the same rows (the literal `cell IN (...)` a
+    * cell-partitioned store prunes its scan with), so the probe side is
+    * never scanned twice. Past the cap (the driver has seen `cap + 1`
+    * rows) the job is cancelled, the rows dropped, and None sends the
+    * caller to the shuffled kNN-join sweep, which is result-identical
+    * (same equi-join) and scale-safe. Driver memory stays bounded by the
+    * cap plus the tasks already in flight at cancellation, the same order
+    * as the broadcast itself. (`limit(cap + 1).collect()` would bound the
+    * rows too, but scans in growing partition passes — one job each.)
+    * With `broadcastQueries` off (the caller's sweep shape) nothing runs
+    * and the answer is None.
     */
-  private def fitsBroadcast(queries: DataFrame, cap: Int): Boolean =
-    queries.limit(cap + 1).count() <= cap
+  private def fetchProbes(
+      queries: DataFrame,
+      cap: Int,
+      broadcastQueries: Boolean): Option[(DataFrame, Seq[Any])] = {
+    if (!broadcastQueries) return None // the caller asked for the sweep
+    val spark = queries.sparkSession
+    val rdd = queries.rdd
+    val rows = scala.collection.mutable.ArrayBuffer.empty[Row]
+    @volatile var over = false
+    @volatile var job: Option[FutureAction[Unit]] = None
+    val f = spark.sparkContext.submitJob(rdd,
+      (it: Iterator[Row]) => it.take(cap + 1).toArray,
+      rdd.partitions.indices,
+      (_: Int, part: Array[Row]) => if (!over) {
+        rows ++= part
+        if (rows.size > cap) {
+          over = true
+          rows.clear()
+          job.foreach(_.cancel())
+        }
+      },
+      ())
+    job = Some(f)
+    if (over) f.cancel() // the cap tripped before `job` was set
+    Await.ready(f, Duration.Inf)
+    if (over) None
+    else {
+      f.value.get.get // a failed fetch surfaces as the caller's exception
+      val cell = queries.schema.fieldIndex("cell")
+      Some((spark.createDataFrame(rows.asJava, queries.schema),
+        rows.map(_.get(cell)).distinct.toSeq))
+    }
+  }
 
   /** IVF top-k with the learned quantizer: corpus rows live in their
     * nearest-centroid cell; each query probes its `nprobe` best cells
@@ -351,12 +397,13 @@ object Similarity {
     *   - true (default), the QUERY-SERVING shape: the probe set is small
     *     (≪ the ~10 MB broadcast threshold after the nprobe explode) and
     *     ships to every corpus partition — the corpus never shuffles.
-    *     The small-probe contract is ENFORCED: the probe side is counted
-    *     with an early-terminating limit scan and anything over
-    *     `maxBroadcastProbes` (post-explode rows) automatically falls
-    *     back to the sweep shape below — a forced broadcast hint bypasses
-    *     Spark's size check, so an unguarded corpus-sized probe set would
-    *     OOM every executor at scale;
+    *     The small-probe contract is ENFORCED: one bounded fetch
+    *     ([[fetchProbes]]) brings back at most `maxBroadcastProbes + 1`
+    *     post-explode probe rows; within the cap those rows are what
+    *     broadcasts, and anything over it automatically falls back to
+    *     the sweep shape below — a forced broadcast hint bypasses Spark's
+    *     size check, so an unguarded corpus-sized probe set would OOM
+    *     every executor at scale;
     *   - false, the KNN-JOIN shape (the all-corpus semantic-dedup sweep a
     *     training pipeline runs, where "queries" IS the corpus and a
     *     broadcast would ship the whole corpus to every task): both sides
@@ -415,16 +462,16 @@ object Similarity {
       .select(col("vec_id").as("query_id"),
         explode(topCells(col("embedding"), cents, nprobe)).as("cell"),
         col("embedding").as("emb_q"), col("nrm").as("nrm_q"))
-    val joined =
-      // the small-probe contract is ENFORCED, not assumed: an oversized
-      // probe set (counted post-explode, the actual broadcast payload)
-      // falls back to the sweep join automatically — identical result
-      if (broadcastQueries && fitsBroadcast(queries, maxBroadcastProbes))
-        corpus.join(broadcast(queries), Seq("cell"))
+    // the small-probe contract is ENFORCED, not assumed: an oversized
+    // probe set (counted post-explode, the actual broadcast payload)
+    // falls back to the sweep join automatically — identical result
+    val joined = fetchProbes(queries, maxBroadcastProbes, broadcastQueries) match {
+      case Some((probes, _)) => corpus.join(broadcast(probes), Seq("cell"))
       // the kNN-join sweep gets semDedup's skew treatment: a mega-cell
       // (both sides corpus-sized under a duplicate-heavy quantizer) fans
       // out over the 2-D block grid instead of one |cell|·|probes| task
-      else blockedCellJoin(corpus, "neighbor_id", queries, "query_id", maxCellSize)
+      case None => blockedCellJoin(corpus, "neighbor_id", queries, "query_id", maxCellSize)
+    }
     val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id"))
     val out = Pins.pin(joined
       .filter(col("query_id") =!= col("neighbor_id"))
@@ -462,18 +509,19 @@ object Similarity {
     *
     *   - no per-serve cell assignment — the O(N·numCells) centroid dots
     *     were paid once at build time;
-    *   - on the small-probe broadcast path the probed cell ids (bounded
-    *     by the just-verified probe count) are collected and pushed as a
-    *     literal `cell IN (...)` predicate — on a cell-PARTITIONED store
-    *     that is a static partition filter, so the CORPUS side of the
-    *     join reads only the probed cells (at 100 TB with √N cells, a
-    *     64-query nprobe=2 serve touches ~128 partitions of millions —
-    *     that scan's cost follows the probe set, not the corpus). The
-    *     QUERY-side lookup (`assigned.filter(queryPred)`) is a separate
-    *     scan pruned only by parquet pushdown of `queryPred`, not by
-    *     cells — a real service that already holds its query vectors
-    *     should pass them via [[ivfTopKAssignedWith]] and skip that
-    *     store scan entirely;
+    *   - on the small-probe broadcast path the probe side runs ONCE: the
+    *     bounded fetch ([[fetchProbes]]) brings its rows to the driver,
+    *     they broadcast as a local relation, and the probed cell ids read
+    *     off the same rows are pushed as a literal `cell IN (...)`
+    *     predicate — on a cell-PARTITIONED store that is a static
+    *     partition filter, so the CORPUS side of the join reads only the
+    *     probed cells (at 100 TB with √N cells, a 64-query nprobe=2 serve
+    *     touches ~128 partitions of millions — that scan's cost follows
+    *     the probe set, not the corpus). The QUERY-side lookup
+    *     (`assigned.filter(queryPred)`) is the fetch's scan, pruned only
+    *     by parquet pushdown of `queryPred`, not by cells — a real
+    *     service that already holds its query vectors should pass them
+    *     via [[ivfTopKAssignedWith]] and skip that store scan entirely;
     *   - the oversized-probe fallback is the same valved kNN-join sweep
     *     as the in-line form (a full-corpus sweep reads everything
     *     regardless, so there is nothing for pruning to save).
@@ -529,12 +577,12 @@ object Similarity {
       .select(col("query_id"),
         explode(topCells(col("embedding"), cents, nprobe)).as("cell"),
         col("embedding").as("emb_q"), col("nrm").as("nrm_q"))
-    val joined =
-      if (broadcastQueries && fitsBroadcast(queries, maxBroadcastProbes)) {
-        val probed = queries.select(col("cell")).distinct().collect().map(_.get(0))
-        corpus.filter(col("cell").isin(probed: _*))
-          .join(broadcast(queries), Seq("cell"))
-      } else blockedCellJoin(corpus, "neighbor_id", queries, "query_id", maxCellSize)
+    val joined = fetchProbes(queries, maxBroadcastProbes, broadcastQueries) match {
+      case Some((probes, cells)) =>
+        corpus.filter(col("cell").isin(cells: _*))
+          .join(broadcast(probes), Seq("cell"))
+      case None => blockedCellJoin(corpus, "neighbor_id", queries, "query_id", maxCellSize)
+    }
     val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id"))
     (if (excludeSelf) joined.filter(col("query_id") =!= col("neighbor_id"))
      else joined)
@@ -743,9 +791,8 @@ object Similarity {
       // small-probe contract enforced as in [[ivfTopKWithCentroids]]: an
       // oversized probe set falls back to the shuffled sweep join
       .join(
-        if (broadcastQueries && fitsBroadcast(queries, maxBroadcastProbes))
-          broadcast(queries)
-        else queries,
+        fetchProbes(queries, maxBroadcastProbes, broadcastQueries)
+          .map(p => broadcast(p._1)).getOrElse(queries),
         Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("adc", adc)
@@ -841,12 +888,12 @@ object Similarity {
         srpCode(col("embedding"), 0, cellBits).as("cell"),
         col("embedding").as("emb_q"), col("nrm").as("nrm_q"))
     val adc = adcScore(books, col("emb_q"), col("codes"))
-    val joined =
-      if (broadcastQueries && fitsBroadcast(queries, maxBroadcastProbes)) {
-        val probed = queries.select(col("cell")).distinct().collect().map(_.get(0))
-        corpus.filter(col("cell").isin(probed: _*))
-          .join(broadcast(queries), Seq("cell"))
-      } else corpus.join(queries, Seq("cell"))
+    val joined = fetchProbes(queries, maxBroadcastProbes, broadcastQueries) match {
+      case Some((probes, cells)) =>
+        corpus.filter(col("cell").isin(cells: _*))
+          .join(broadcast(probes), Seq("cell"))
+      case None => corpus.join(queries, Seq("cell"))
+    }
     val wA = Window.partitionBy(col("query_id")).orderBy(col("adc").desc, col("neighbor_id"))
     val wE = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id"))
     (if (excludeSelf) joined.filter(col("query_id") =!= col("neighbor_id"))

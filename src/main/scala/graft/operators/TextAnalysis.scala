@@ -853,7 +853,8 @@ object TextAnalysis {
     * and the per-doc join both read the pinned N-row (doc_id, dl) table,
     * not a re-tokenize. The tf table explodes tokens but filters to the
     * query terms BEFORE the shuffle, so only matching postings move; df
-    * and the corpus stats broadcast as |terms|-row / 1-row tables. Top-k
+    * broadcasts as a |terms|-row table and the corpus stats (folded once
+    * from the pinned doclen) ride as literals. Top-k
     * is TakeOrdered (distributed heap, never a global sort), ties broken
     * by doc_id. The checkpoint is released before returning; the ≤ k-row
     * result is eagerly materialized first.
@@ -862,9 +863,7 @@ object TextAnalysis {
     require(terms.nonEmpty, "terms must be non-empty")
     require(k > 0, "k must be positive")
     val dl = docLengths(docs)
-    val stats = dl.agg(
-      count(lit(1)).as("n_docs"),
-      coalesce(sum(col("dl")), lit(0L)).as("a_tokens"))
+    val st = Bm25Stats.of(dl)
     // pinned: df derivation and scoring both read the tf table — without
     // the pin each reference re-tokenizes the corpus (the bigramScores
     // lesson: identical agg subtrees get zero ReusedExchange)
@@ -877,8 +876,7 @@ object TextAnalysis {
     val out = Pins.pin(tf
       .join(dl, Seq("doc_id"))
       .join(broadcast(dfreq), Seq("tok"))
-      .crossJoin(broadcast(stats))
-      .select(col("doc_id"), bm25Weight.as("w"))
+      .select(col("doc_id"), bm25Weight(st).as("w"))
       .groupBy(col("doc_id"))
       .agg(sum(col("w")).as("score"), count(lit(1)).as("n_hit"))
       .orderBy(col("score").desc, col("doc_id"))
@@ -920,7 +918,7 @@ object TextAnalysis {
       .filter(col("tok").isin(terms: _*))
       .groupBy(col("doc_id"), col("tok"))
       .agg(count(lit(1)).as("tf"), sort_array(collect_list(col("pos"))).as("ps")))
-    val out = scorePhrase(post, dl, phrase, k)
+    val out = scorePhrase(post, dl, phrase, k, Bm25Stats.of(dl))
     Pins.release(dl)
     Pins.release(post)
     out
@@ -929,14 +927,14 @@ object TextAnalysis {
   /** The phrase-match + score tail [[phraseTopK]] and
     * [[phraseTopKFromIndex]] share, over a (doc_id, tok, tf, ps)
     * positional-postings table already restricted to the phrase's
-    * distinct terms. Inputs arrive pinned; callers release after the
-    * returned frame's eager pin.
+    * distinct terms, scored against the corpus statistics `st`. Inputs
+    * arrive pinned; callers release after the returned frame's eager
+    * pin.
     */
   private def scorePhrase(
       post: DataFrame, dl: DataFrame, phrase: Seq[String], k: Int,
-      stats: Option[DataFrame] = None): DataFrame = {
+      st: Bm25Stats): DataFrame = {
     val terms = phrase.distinct
-    val statsF = stats.map(scalarStats).getOrElse(corpusStats(dl))
     val dfreq = post.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     // per-doc term→positions map; docs missing any distinct term cannot match
     val pmap = post
@@ -957,8 +955,7 @@ object TextAnalysis {
       else post.select(col("doc_id"), col("tok"), col("tf"))
         .join(dl, Seq("doc_id")))
       .join(broadcast(dfreq), Seq("tok"))
-      .crossJoin(broadcast(statsF))
-      .select(col("doc_id"), bm25Weight.as("w"))
+      .select(col("doc_id"), bm25Weight(st).as("w"))
       .groupBy(col("doc_id"))
       .agg(sum(col("w")).as("score"))
     Pins.pin(hits
@@ -1049,14 +1046,15 @@ object TextAnalysis {
     */
   def phraseTopKFromIndex(
       postingsPos: DataFrame, doclen: DataFrame, phrase: Seq[String], k: Int,
-      stats: Option[DataFrame] = None): DataFrame = {
+      stats: Option[Bm25Stats] = None): DataFrame = {
     require(phrase.size >= 2, "a phrase needs at least two terms")
     require(k > 0, "k must be positive")
     val terms = phrase.distinct
+    val st = stats.getOrElse(Bm25Stats.of(doclen))
     val hasDl = postingsPos.columns.contains("dl")
     // same pin discipline as bm25PerQueryFromIndex: doclen materializes
-    // only when the serve will read it
-    val needDl = !hasDl || stats.isEmpty
+    // only when the serve will join it
+    val needDl = !hasDl
     val dl = if (needDl) Pins.pin(doclen.select(col("doc_id"), col("dl")))
       else doclen
     val cols = Seq(col("doc_id"), col("tok"), col("tf"), col("ps")) ++
@@ -1069,7 +1067,7 @@ object TextAnalysis {
             col("tok").isin(terms: _*))
           .select(cols: _*)
       } else postingsPos.filter(col("tok").isin(terms: _*)).select(cols: _*))
-    val out = scorePhrase(post, dl, phrase, k, stats)
+    val out = scorePhrase(post, dl, phrase, k, st)
     if (needDl) Pins.release(dl)
     Pins.release(post)
     out
@@ -1509,6 +1507,24 @@ object TextAnalysis {
     parts.foldLeft((0L, 0L)) { case ((n, s), (pn, ps)) => (n + pn, s + ps) }
   }
 
+  /** A BM25 corpus's statistics — document count N and token total A —
+    * as a value: [[loadBm25Stats]] sums a store's sidecar into one, and
+    * every serve attaches the two numbers to its weight expression as
+    * literals.
+    */
+  final case class Bm25Stats(nDocs: Long, aTokens: Long)
+
+  object Bm25Stats {
+    /** The statistics folded from a (doc_id, dl) doclen table in one
+      * shuffle-free job ([[corpusStatsPair]]) — the fallback for a store
+      * without a sidecar.
+      */
+    def of(doclen: DataFrame): Bm25Stats = {
+      val (nDocs, aTokens) = corpusStatsPair(doclen)
+      Bm25Stats(nDocs, aTokens)
+    }
+  }
+
   /** The per-batch (n_docs, a_tokens) sidecar row, written ON THE DRIVER
     * ([[graft.store.TinyParquet]]): the values are two longs already in
     * hand, so the `coalesce(1)` 1-row write job (plus its AQE ceremony)
@@ -1530,41 +1546,30 @@ object TextAnalysis {
     else graft.store.TinyParquet.writeGroups(spark, dir, bm25StatsSchema, rows)
   }
 
-  /** Grouping-free re-aggregate of the supplied stats frame — the
-    * structurally bounded scalar-build shape the no-cartesian plan audit
-    * admits. SUM, not MAX: on the contractual 1-row [[loadBm25Stats]]
-    * frame they are identical, but a caller that wires the raw
-    * multi-row append-only sidecar straight into a serve must get the
-    * TOTAL corpus statistics, never one batch's row silently.
-    */
-  private def scalarStats(st: DataFrame): DataFrame =
-    st.agg(coalesce(sum(col("n_docs")), lit(0L)).as("n_docs"),
-      coalesce(sum(col("a_tokens")), lit(0L)).as("a_tokens"))
-
   /** The stored corpus-stats sidecar of a [[saveBm25Index]]/
     * [[saveBm25Positional]] store, or None for a store written before
-    * the sidecar existed (serves then fall back to aggregating doclen).
+    * the sidecar existed (serves then fold doclen instead, once per
+    * call or — in [[RetrievalService]] — once per served collection).
     *
     * The sidecar is an APPEND-ONLY table of per-batch (n_docs, a_tokens)
     * rows — the house mergeable-state shape: the one-shot build writes
     * one row, every [[appendBm25Index]] appends one more, and this load
-    * SUMS them into the 1-row frame the serve broadcasts. Accretion
-    * therefore never overwrites a file a live listener may be reading
-    * (the never-overwrite-what-is-being-read rule — append-only, like
-    * the postings and doclen halves), and the summed load is the same
-    * grouping-free scalar aggregate the plan audit admits.
+    * SUMS them into the one [[Bm25Stats]] value the serves attach to
+    * their weight expression as literals. Accretion therefore never
+    * overwrites a file a live listener may be reading (the
+    * never-overwrite-what-is-being-read rule — append-only, like the
+    * postings and doclen halves).
     *
     * Torn-sidecar guard: a stats directory that exists but sums to
     * n_docs = 0 (a crash before the first row committed, or an empty
-    * corpus) returns None — the serve then falls back to the doclen
-    * aggregation instead of silently scoring with zeroed corpus
-    * statistics (bm25Weight's denominator would null every score). The
-    * sidecar is metadata-sized, so the summing read is eager (one tiny
-    * scan at load time) and the returned frame is a 1-row literal the
-    * serve broadcasts.
+    * corpus) returns None — the serve then falls back to folding doclen
+    * instead of silently scoring with zeroed corpus statistics
+    * (bm25Weight's denominator would null every score). The sidecar is
+    * metadata-sized and summed on the driver at load time; no serve
+    * scans or joins it.
     */
   def loadBm25Stats(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Option[DataFrame] = {
+      spark: org.apache.spark.sql.SparkSession, dir: String): Option[Bm25Stats] = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/stats")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
@@ -1577,10 +1582,7 @@ object TextAnalysis {
       val rows = graft.store.TinyParquet.readGroups(spark, s"$dir/stats")
       val nDocs = rows.map(g => graft.store.TinyParquet.long(g, "n_docs")).sum
       val aTokens = rows.map(g => graft.store.TinyParquet.long(g, "a_tokens")).sum
-      if (nDocs == 0L) None
-      else Some(spark.range(1).select(
-        lit(nDocs).as("n_docs"),
-        lit(aTokens).as("a_tokens")))
+      if (nDocs == 0L) None else Some(Bm25Stats(nDocs, aTokens))
     }
   }
 
@@ -1622,8 +1624,7 @@ object TextAnalysis {
       else None
     (loadBm25Stats(spark, dir), postPath) match {
       case (Some(st), Some(pp)) =>
-        val sidecar =
-          st.select(col("n_docs"), col("a_tokens")).as[(Long, Long)].head()
+        val sidecar = (st.nDocs, st.aTokens)
         val dl = spark.read.parquet(s"$dir/doclen")
         val fromDl = corpusStats(dl)
           .select(col("n_docs"), col("a_tokens")).as[(Long, Long)].head()
@@ -1889,13 +1890,13 @@ object TextAnalysis {
     */
   def bm25TopKFromIndex(
       postings: DataFrame, doclen: DataFrame, terms: Seq[String], k: Int,
-      stats: Option[DataFrame] = None): DataFrame = {
+      stats: Option[Bm25Stats] = None): DataFrame = {
     require(terms.nonEmpty, "terms must be non-empty")
     require(k > 0, "k must be positive")
-    // corpus statistics: one stored row when the sidecar is supplied;
-    // otherwise the legacy doclen aggregation (a corpus-table scan per
-    // query — fine at test scale, the sidecar is the 100 TB path)
-    val statsF = stats.map(scalarStats).getOrElse(corpusStats(doclen))
+    // corpus statistics: the stored sidecar's when supplied; otherwise
+    // folded from doclen (a corpus-table scan per call — fine at test
+    // scale, the sidecar is the 100 TB path)
+    val st = stats.getOrElse(Bm25Stats.of(doclen))
     val hasDl = postings.columns.contains("dl")
     val cols = Seq(col("doc_id"), col("tok"), col("tf")) ++
       (if (hasDl) Seq(col("dl")) else Nil)
@@ -1910,8 +1911,7 @@ object TextAnalysis {
     // dl rides the posting rows on a denormalized store — no doclen join
     (if (hasDl) tf else tf.join(doclen, Seq("doc_id")))
       .join(broadcast(dfreq), Seq("tok"))
-      .crossJoin(broadcast(statsF))
-      .select(col("doc_id"), bm25Weight.as("w"))
+      .select(col("doc_id"), bm25Weight(st).as("w"))
       .groupBy(col("doc_id"))
       .agg(sum(col("w")).as("score"), count(lit(1)).as("n_hit"))
       .orderBy(col("score").desc, col("doc_id"))
@@ -1919,19 +1919,22 @@ object TextAnalysis {
   }
 
   /** The per-posting integer BM25 weight (see [[bm25TopK]] scaladoc for
-    * the formula and bounds); expects columns tf, df, dl, n_docs,
-    * a_tokens in scope.
+    * the formula and bounds), with the corpus statistics attached as
+    * literals — no stats frame to scan, aggregate, or join; expects
+    * columns tf, df, dl in scope.
     */
-  private def bm25Weight: Column = {
+  private def bm25Weight(st: Bm25Stats): Column = {
     val d38 = "decimal(38,0)"
+    val nDocs = lit(st.nDocs)
+    val aTokens = lit(st.aTokens)
     val saturPpm = call_function("div",
-      lit(22000000L).cast(d38) * col("a_tokens").cast(d38) * col("tf").cast(d38),
-      lit(10L).cast(d38) * col("a_tokens").cast(d38) * col("tf").cast(d38)
-        + lit(3L).cast(d38) * col("a_tokens").cast(d38)
-        + lit(9L).cast(d38) * col("dl").cast(d38) * col("n_docs").cast(d38))
+      lit(22000000L).cast(d38) * aTokens.cast(d38) * col("tf").cast(d38),
+      lit(10L).cast(d38) * aTokens.cast(d38) * col("tf").cast(d38)
+        + lit(3L).cast(d38) * aTokens.cast(d38)
+        + lit(9L).cast(d38) * col("dl").cast(d38) * nDocs.cast(d38))
     val idfPpm = call_function("div",
       lit(1000000L).cast(d38) *
-        (lit(2L) * col("n_docs") - lit(2L) * col("df") + lit(1L)).cast(d38),
+        (lit(2L) * nDocs - lit(2L) * col("df") + lit(1L)).cast(d38),
       (lit(2L) * col("df") + lit(1L)).cast(d38))
     call_function("div",
       saturPpm.cast(d38) * idfPpm.cast(d38), lit(1000000L).cast(d38))
@@ -1984,7 +1987,7 @@ object TextAnalysis {
       .join(broadcast(terms), Seq("tok"))
       .groupBy(col("doc_id"), col("tok"))
       .agg(count(lit(1)).as("tf")))
-    val out = scorePerQuery(tf, dl, qt, k, salts)
+    val out = scorePerQuery(tf, dl, qt, k, salts, Bm25Stats.of(dl))
     Pins.release(qt)
     Pins.release(dl)
     Pins.release(tf)
@@ -1993,19 +1996,18 @@ object TextAnalysis {
 
   /** The scoring tail [[bm25PerQuery]] and [[bm25PerQueryFromIndex]]
     * share: per-(query, doc) Σ qtf·w over a (doc_id, tok, tf) table, dl
-    * store and qt term bags, ranked by the salted two-stage top-k. All
-    * three inputs are multi-referenced — callers pass them pinned and
-    * release after the returned frame's eager pin.
+    * store and qt term bags against the corpus statistics `st`, ranked
+    * by the salted two-stage top-k. All three inputs are
+    * multi-referenced — callers pass them pinned and release after the
+    * returned frame's eager pin.
     */
   private def scorePerQuery(
       tf: DataFrame, dl: DataFrame, qt: DataFrame, k: Int, salts: Int,
-      stats: Option[DataFrame] = None): DataFrame = {
-    val statsF = stats.map(scalarStats).getOrElse(corpusStats(dl))
+      st: Bm25Stats): DataFrame = {
     val dfreq = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     val scored = (if (tf.columns.contains("dl")) tf else tf.join(dl, Seq("doc_id")))
       .join(broadcast(dfreq), Seq("tok"))
-      .crossJoin(broadcast(statsF))
-      .select(col("tok"), col("doc_id"), bm25Weight.as("w"))
+      .select(col("tok"), col("doc_id"), bm25Weight(st).as("w"))
       .join(broadcast(qt), Seq("tok"))
       .groupBy(col("query_id"), col("doc_id"))
       // qtf·w multiplied and summed as DECIMAL so no (qtf, #terms) shape
@@ -2036,7 +2038,7 @@ object TextAnalysis {
   def bm25PerQueryFromIndex(
       postings: DataFrame, doclen: DataFrame, queries: DataFrame, k: Int,
       salts: Int = 16, weighted: Boolean = false,
-      stats: Option[DataFrame] = None): DataFrame = {
+      stats: Option[Bm25Stats] = None): DataFrame = {
     require(k > 0, "k must be positive")
     require(salts > 0, "salts must be positive")
     val posting = queries
@@ -2047,11 +2049,11 @@ object TextAnalysis {
       else posting.distinct().withColumn("qtf", lit(1L)))
     val termSeq = qt.select(col("tok")).distinct()
       .collect().map(_.getString(0)).toSeq
+    val st = stats.getOrElse(Bm25Stats.of(doclen))
     val hasDl = postings.columns.contains("dl")
     // doclen is corpus-row-sized: pin (an eager materialization) ONLY
-    // when the serve will actually read it — a dl-denormalized store
-    // with the stats sidecar never does
-    val needDl = !hasDl || stats.isEmpty
+    // when the serve will join it — a dl-denormalized store never does
+    val needDl = !hasDl
     val dl = if (needDl) Pins.pin(doclen.select(col("doc_id"), col("dl")))
       else doclen
     val cols = Seq(col("doc_id"), col("tok"), col("tf")) ++
@@ -2064,7 +2066,7 @@ object TextAnalysis {
             col("tok").isin(termSeq: _*))
           .select(cols: _*)
       } else postings.filter(col("tok").isin(termSeq: _*)).select(cols: _*))
-    val out = scorePerQuery(tf, dl, qt, k, salts, stats)
+    val out = scorePerQuery(tf, dl, qt, k, salts, st)
     Pins.release(qt)
     if (needDl) Pins.release(dl)
     Pins.release(tf)

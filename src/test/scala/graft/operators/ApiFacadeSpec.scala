@@ -204,6 +204,39 @@ class ApiFacadeSpec extends SparkSpec {
     assert(without.status === 206 && without.data.get.count() === 1)
   }
 
+  test("exact and resubmit bodies equal their plans rendered directly, in row order") {
+    // the facade serves the rows it fetched once; the body must be the
+    // one the lookup / publish plan renders to on its own
+    val direct = QueryService(index)
+    for (id <- Seq("id_007", "id_030")) {
+      val r = rApi.getUnique(GetUniqueRequest("meta", id))
+      assert(r.status === 200)
+      assert(ApiServer.render(r.message, r.data)
+        === ApiServer.render(OkMessage, Some(direct.get(id, UniqueAttrs))))
+    }
+    val rs = Resubmitter(QueryService(index), records)
+    // 200 clean, 206 partial (the id_007 hole), 400 nothing published
+    for ((ids, status) <- Seq(
+        Seq("id_001", "id_002", "id_013", "id_024") -> 200,
+        Seq("id_007", "id_008") -> 206,
+        Seq("id_007") -> 400)) {
+      val r = rApi.resubmitIds(ResubmitIdsRequest("meta", Some(ids)))
+      assert(r.status === status, ids)
+      assert(ApiServer.render(r.message, r.data)
+        === ApiServer.render(r.message, Some(rs.byIds(ids).publish)), ids)
+    }
+    // the interval and query modes share the same run
+    val b1 = rApi.resubmitInterval(ResubmitIntervalRequest("meta", Some("b1")))
+    assert(b1.status === 206)
+    assert(ApiServer.render(b1.message, b1.data) === ApiServer.render(b1.message,
+      Some(rs.byInterval(new Timestamp(0L), fixedNow, "b1", () => fixedNow).publish)))
+    val filters = Seq(Map[String, FilterValue]("broker_id" -> Eq("b2")))
+    val q = rApi.resubmitQuery(ResubmitQueryRequest("meta", Some(filters)))
+    assert(q.status === 200)
+    assert(ApiServer.render(q.message, q.data)
+      === ApiServer.render(q.message, Some(rs.byQuery(filters).publish)))
+  }
+
   test("resubmit query: whitelist failures 400; a clean empty drain is still 200") {
     val hit = rApi.resubmitQuery(ResubmitQueryRequest("meta",
       Some(Seq(Map("broker_id" -> Eq("b2"))))))

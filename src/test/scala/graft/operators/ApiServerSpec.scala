@@ -356,9 +356,9 @@ class ApiServerSpec extends SparkSpec {
     }
   }
 
-  test("vector, phrase, batch-search, and hybrid retrieval routes over a real socket") {
-    import org.apache.spark.sql.functions.{col, row_number}
-    import org.apache.spark.sql.expressions.Window
+  // BM25, positional, IVF and PQ stores over the sf0.001 corpus, saved
+  // and reloaded — the retrieval fixture the full-route specs share
+  private lazy val stores = {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "text")
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -375,13 +375,34 @@ class ApiServerSpec extends SparkSpec {
     Similarity.savePqCodes(spark, s"$wd/pq",
       Similarity.encodePqCodes(emb, books, cellBits = 4), books, cellBits = 4)
     val (pqCodes, pqCb) = Similarity.loadPqCodes(spark, s"$wd/pq", books)
-    val retrieval = RetrievalService(
+    Stores(emb, postings, doclen, postPos, doclenP, cents, assigned, books, pqCodes, pqCb)
+  }
+
+  private case class Stores(
+      emb: org.apache.spark.sql.DataFrame,
+      postings: org.apache.spark.sql.DataFrame,
+      doclen: org.apache.spark.sql.DataFrame,
+      postPos: org.apache.spark.sql.DataFrame,
+      doclenP: org.apache.spark.sql.DataFrame,
+      cents: Array[Array[Double]],
+      assigned: org.apache.spark.sql.DataFrame,
+      books: Array[Array[Array[Double]]],
+      pqCodes: org.apache.spark.sql.DataFrame,
+      pqCb: Int) {
+    def retrieval: RetrievalService = RetrievalService(
       bm25 = Map("docs" -> ((postings, doclen)), "lexonly" -> ((postings, doclen))),
       ann = Map("docs" -> RetrievalService.AnnStore(assigned, cents),
         "capped" -> RetrievalService.AnnStore(assigned, cents, maxQueryIds = 2)),
       phrase = Map("docs" -> ((postPos, doclenP))),
       pq = Map("docs" -> RetrievalService.PqStore(pqCodes, emb, books, pqCb)))
-    val srv = new ApiServer(facade, ApiServer.Indexer, retrieval = Some(retrieval))
+  }
+
+  test("vector, phrase, batch-search, and hybrid retrieval routes over a real socket") {
+    import org.apache.spark.sql.functions.{col, row_number}
+    import org.apache.spark.sql.expressions.Window
+    val Stores(emb, postings, doclen, postPos, doclenP, cents, assigned, books,
+      pqCodes, pqCb) = stores
+    val srv = new ApiServer(facade, ApiServer.Indexer, retrieval = Some(stores.retrieval))
     srv.start()
     def dataNodes(body: String): Seq[com.fasterxml.jackson.databind.JsonNode] = {
       val d = ApiServer.Json.readTree(body).get("data")
@@ -558,6 +579,91 @@ class ApiServerSpec extends SparkSpec {
       assert(post(base, "/hybrid/docs",
         """{"terms":["x"],"query_id":0,"k":100000}""").statusCode() == 400)
     } finally srv.stop(0)
+  }
+
+  test("each serve route runs at most its measured number of Spark jobs") {
+    // one request per route, counted after a warm-up request of the same
+    // route (first-use work — the lazily folded corpus stats, codegen —
+    // stays out of the count). The ceilings are the counts measured on
+    // these fixtures once every request ran each of its subplans once: an
+    // eager count, a distinct-collect of the probed cells, a stats frame
+    // joined per request, or a second run of the exact / resubmit plan
+    // pushes a route past its ceiling.
+    val ceilings = Map("exact" -> 1, "all" -> 1, "range" -> 1, "query" -> 1,
+      "search" -> 4, "phrase" -> 8, "ann" -> 4, "pq" -> 5, "hybrid" -> 9,
+      "resubmit" -> 6)
+    // the index and records as the store scans a deployment serves (a
+    // local fixture frame would answer lookups without any job at all)
+    val wd = java.nio.file.Files.createTempDirectory("servejobs").toString
+    index.write.parquet(s"$wd/index")
+    records.write.parquet(s"$wd/records")
+    val stored = QueryService(spark.read.parquet(s"$wd/index"))
+    val scanned = ApiFacade(Map("meta" -> stored), now = () => fixedNow,
+      resubmitters = Map("meta" -> Resubmitter(stored, spark.read.parquet(s"$wd/records"))))
+    val indexer = new ApiServer(scanned, ApiServer.Indexer, retrieval = Some(stores.retrieval))
+    val resubmitter = new ApiServer(scanned, ApiServer.Resubmitter)
+    Seq(indexer, resubmitter).foreach(_.start())
+    val ix = s"http://127.0.0.1:${indexer.boundPort}"
+    val rs = s"http://127.0.0.1:${resubmitter.boundPort}"
+    val requests: Seq[(String, () => HttpResponse[String])] = Seq(
+      "exact" -> (() => get(ix, "/exact/meta/id_007")),
+      "all" -> (() => post(ix, "/all/meta", """{"ids":["id_001","id_010"]}""")),
+      "range" -> (() => get(ix, "/range/meta/b1?limit=4")),
+      "query" -> (() => post(ix, "/query/meta",
+        """{"filters":[{"broker_id":"b1","meta_k":{"$gte":"50"}}]}""")),
+      "search" -> (() => post(ix, "/search/docs", """{"terms":["vector","stream"],"k":10}""")),
+      "phrase" -> (() => post(ix, "/phrase/docs", """{"phrase":["stream","window"],"k":5}""")),
+      "ann" -> (() => post(ix, "/ann/docs", """{"query_ids":[0],"k":3,"nprobe":2}""")),
+      "pq" -> (() => post(ix, "/pq/docs", """{"query_ids":[0],"k":3,"rerank":16}""")),
+      "hybrid" -> (() => post(ix, "/hybrid/docs",
+        """{"terms":["vector","stream"],"query_id":0,"k":10,"nprobe":2}""")),
+      "resubmit" -> (() => post(rs, "/resubmit/meta?topic=t", """{"ids":["id_001","id_002"]}""")))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val counts = requests.map { case (route, send) =>
+        assert(send().statusCode() == 200, route)
+        org.apache.spark.graft.ListenerBridge.drain(sc)
+        jobs.set(0)
+        val r = send()
+        org.apache.spark.graft.ListenerBridge.drain(sc)
+        assert(r.statusCode() == 200, route)
+        assert(dataRows(r.body()) > 0, route)
+        route -> jobs.get()
+      }
+      info(counts.map { case (r, n) => s"$r=$n" }.mkString(" "))
+      counts.foreach { case (route, n) =>
+        assert(n <= ceilings(route), s"/$route ran $n Spark jobs, ceiling ${ceilings(route)}")
+      }
+    } finally {
+      sc.removeSparkListener(listener)
+      Seq(indexer, resubmitter).foreach(_.stop(0))
+    }
+  }
+
+  test("stop ends the worker pool: no worker thread outlives the server") {
+    import scala.jdk.CollectionConverters._
+    val srv = new ApiServer(facade, ApiServer.Indexer)
+    srv.start()
+    val prefix = s"${ApiServer.WorkerPrefix}${srv.boundPort}-"
+    def workers = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.getName.startsWith(prefix) && t.isAlive)
+    // concurrent requests, so the pool has spun up several threads
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val base = s"http://127.0.0.1:${srv.boundPort}"
+      (1 to 8).map(_ => pool.submit(new java.util.concurrent.Callable[Int] {
+        def call(): Int = get(base, "/range/meta/b1").statusCode()
+      })).foreach(f => assert(f.get(60, java.util.concurrent.TimeUnit.SECONDS) == 200))
+    } finally pool.shutdown()
+    assert(workers.nonEmpty, "the requests ran on the server's named workers")
+    srv.stop(0)
+    assert(workers.isEmpty, s"worker threads left after stop: ${workers.map(_.getName)}")
   }
 
   test("a handler crash surfaces as a well-formed 500, not a hung socket") {

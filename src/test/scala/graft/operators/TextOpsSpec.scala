@@ -294,8 +294,8 @@ class TextOpsSpec extends SparkSpec {
   test("broadcast small-probe contract is enforced: oversized probe sets fall back to the sweep") {
     // the r12 #5 guard: a forced broadcast() hint bypasses AQE's size
     // check, so a corpus-sized queryPred under the default serving shape
-    // would OOM at scale — the guard counts probes (early-terminating
-    // limit scan) and strips the hint above maxBroadcastProbes
+    // would OOM at scale — the guard fetches at most maxBroadcastProbes + 1
+    // probe rows and strips the hint above maxBroadcastProbes
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").cache()
     def keys(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "rank", "neighbor_id")
@@ -445,6 +445,53 @@ class TextOpsSpec extends SparkSpec {
     assert(keys(pqGuarded) === keys(Similarity.pqTopKWithCodes(codes, emb,
       col("vec_id") % 2 === 0, 3, books, cellBits = 4, rerank = 50,
       broadcastQueries = false)))
+    // the bounded probe fetch at its edges, over the stored ANN and PQ
+    // serves in id and vector mode: a probe set of exactly the cap
+    // (post-explode rows — nprobe per query for IVF, one per query for
+    // PQ) keeps the broadcast, one row past it sweeps, and absent ids
+    // serve nothing — each equal to the broadcastQueries = false sweep
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "rank", "neighbor_id", "cosine")
+        .as[(Long, Long, Long, Double)].collect().toSet
+    def vecs(ids: Seq[Long]) = emb.filter(col("vec_id").isin(ids: _*))
+      .select(col("vec_id").as("query_id"), col("embedding"))
+    type Serve = (Seq[Long], Boolean, Int) => org.apache.spark.sql.DataFrame
+    val modes: Seq[(String, Int, Serve)] = Seq(
+      ("ann ids", 2, (ids, bc, cap) => Similarity.ivfTopKAssigned(loaded,
+        col("vec_id").isin(ids: _*), 3, cents, nprobe = 2,
+        broadcastQueries = bc, maxBroadcastProbes = cap)),
+      ("ann vectors", 2, (ids, bc, cap) => Similarity.ivfTopKAssignedWith(loaded,
+        vecs(ids), 3, cents, nprobe = 2, broadcastQueries = bc,
+        maxBroadcastProbes = cap, excludeSelf = false)),
+      ("pq ids", 1, (ids, bc, cap) => Similarity.pqTopKWithCodes(loadedCodes, emb,
+        col("vec_id").isin(ids: _*), 3, books, cellBits = storedBits, rerank = 16,
+        broadcastQueries = bc, maxBroadcastProbes = cap)),
+      ("pq vectors", 1, (ids, bc, cap) => Similarity.pqTopKCodesWith(loadedCodes, emb,
+        vecs(ids), 3, books, cellBits = storedBits, rerank = 16,
+        broadcastQueries = bc, maxBroadcastProbes = cap, excludeSelf = false)))
+    val ids = Seq(0L, 7L, 21L, 300L)
+    val absent = Seq(1000000L)
+    for ((mode, perQuery, serve) <- modes) {
+      val cap = ids.size * perQuery
+      val sweep = rows(serve(ids, false, cap))
+      assert(sweep.nonEmpty, mode)
+      val atCap = serve(ids, true, cap)
+      assert(hinted(atCap), s"$mode: a probe set of exactly the cap keeps the broadcast")
+      assert(rows(atCap) === sweep, mode)
+      val overCap = serve(ids, true, cap - 1)
+      assert(!hinted(overCap), s"$mode: one probe row past the cap falls back to the sweep")
+      assert(rows(overCap) === sweep, mode)
+      assert(rows(serve(absent, true, cap)).isEmpty, mode)
+      assert(rows(serve(absent, false, cap)).isEmpty, mode)
+    }
+    // through the service: an absent id is a 200 with no rows
+    val svc = RetrievalService(
+      ann = Map("v" -> RetrievalService.AnnStore(loaded, cents)),
+      pq = Map("v" -> RetrievalService.PqStore(loadedCodes, emb, books, storedBits)))
+    for (r <- Seq(svc.annSearch("v", Some(absent), Some(3), Some(2)),
+        svc.pqSearch("v", Some(absent), Some(3), Some(16)))) {
+      assert(r.status === 200 && r.data.get.isEmpty)
+    }
   }
 
   test("semDedup drops exactly the vectors with a smaller same-cell near-duplicate") {
@@ -2867,9 +2914,8 @@ class TextOpsSpec extends SparkSpec {
     val stats = TextAnalysis.loadBm25Stats(spark, s"$wd/tf")
     assert(stats.isDefined)
     // the sidecar IS the doclen aggregation, exactly (zero-token docs in)
-    assert(stats.get.select("n_docs", "a_tokens").as[(Long, Long)].head()
-      === ((d.count(), d.agg(coalesce(sum(col("dl")), lit(0L)))
-        .as[Long].head())))
+    assert(stats.get === TextAnalysis.Bm25Stats(d.count(),
+      d.agg(coalesce(sum(col("dl")), lit(0L))).as[Long].head()))
     // a POISONED doclen leaves the serve untouched when the sidecar and
     // the dl column are in play — the proof the 100 TB path reads one
     // stats row + term-pruned postings and nothing corpus-sized
@@ -2902,9 +2948,7 @@ class TextOpsSpec extends SparkSpec {
       allDocs.filter(col("doc_id") % 2 === 0))
     TextAnalysis.appendBm25Index(spark, s"$wd/acc",
       allDocs.filter(col("doc_id") % 2 === 1))
-    assert(TextAnalysis.loadBm25Stats(spark, s"$wd/acc").get
-      .select("n_docs", "a_tokens").as[(Long, Long)].head()
-      === stats.get.select("n_docs", "a_tokens").as[(Long, Long)].head())
+    assert(TextAnalysis.loadBm25Stats(spark, s"$wd/acc").get === stats.get)
     // the maintenance check: healthy store verifies; a doclen row whose
     // append died before its stats row (the one accretion gap) is caught
     assert(TextAnalysis.verifyBm25Stats(spark, s"$wd/acc"))
@@ -2916,9 +2960,7 @@ class TextOpsSpec extends SparkSpec {
     val surv = allDocs.filter(col("doc_id") % 3 =!= 1)
     TextAnalysis.saveBm25Index(spark, s"$wd/survfresh", surv)
     assert(TextAnalysis.loadBm25Stats(spark, s"$wd/tf2").get
-      .select("n_docs", "a_tokens").as[(Long, Long)].head()
-      === TextAnalysis.loadBm25Stats(spark, s"$wd/survfresh").get
-        .select("n_docs", "a_tokens").as[(Long, Long)].head())
+      === TextAnalysis.loadBm25Stats(spark, s"$wd/survfresh").get)
     // a legacy store with postings but no sidecar refuses appends
     val legacy = s"$wd/legacy"
     bucketedWrite(legacy, Seq((1L, "alpha", 1L, 1L)))
