@@ -9,6 +9,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, Row}
 
+import graft.store.StoreMeta
+
 /** Similarity search over an embedding column (`array<float>`).
   *
   * Cosine math is done in double with a strict left-fold order
@@ -1602,6 +1604,16 @@ object Similarity {
 
   // ------------------------------------------------- index persistence
 
+  /** Parquet schema of the driver-side centroid/codebook coordinate
+    * dumps: (index columns, coordinate) — see [[saveIvfIndex]] /
+    * [[savePqBooks]]. DOUBLE round-trips raw IEEE-754 bits, the same
+    * bit-exactness contract the Spark-written form carried.
+    */
+  private def coordSchema(idx: String*): org.apache.parquet.schema.MessageType =
+    org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      idx.map(c => s"required int32 $c;")
+        .mkString("message graft_coords { ", " ", " required double c; }"))
+
   /** Persist a trained IVF index as parquet tables so it outlives the
     * session: `<dir>/centroids` holds one (cell, dim, c) row per
     * coordinate and `<dir>/cell_stats` the mergeable [[cellStats]]
@@ -1613,16 +1625,6 @@ object Similarity {
     * of retraining per session. Both tables are metadata-sized
     * (cells × dim rows), written as one file each.
     */
-  /** Parquet schema of the driver-side centroid/codebook coordinate
-    * dumps: (index columns, coordinate) — see [[saveIvfIndex]] /
-    * [[savePqBooks]]. DOUBLE round-trips raw IEEE-754 bits, the same
-    * bit-exactness contract the Spark-written form carried.
-    */
-  private def coordSchema(idx: String*): org.apache.parquet.schema.MessageType =
-    org.apache.parquet.schema.MessageTypeParser.parseMessageType(
-      idx.map(c => s"required int32 $c;")
-        .mkString("message graft_coords { ", " ", " required double c; }"))
-
   def saveIvfIndex(
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
@@ -1732,49 +1734,6 @@ object Similarity {
       md.digest().map("%02x".format(_)).mkString.take(15), 16)
   }
 
-  /** One-row store-metadata sidecar: the quantizer stamp plus the cell
-    * geometry the codes were derived under (`cell_bits` = −1 for stores
-    * whose cell is a learned k-means assignment, not an SRP code).
-    * Written and read ON THE DRIVER ([[graft.store.TinyParquet]]) — two
-    * longs never justified a distributed write job plus a
-    * schema-inference + collect round trip per load, which the lifecycle
-    * JobProfiles showed as 3 of the ~40 sequential jobs in every
-    * store-building query. Still plain parquet on disk, same columns.
-    */
-  private val storeMetaSchema = org.apache.parquet.schema.MessageTypeParser
-    .parseMessageType(
-      "message graft_store_meta { required int64 qfp; required int64 cell_bits; }")
-
-  private def writeStoreMeta(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String, qfp: Long, cellBits: Int): Unit =
-    graft.store.TinyParquet.writeGroups(spark, path, storeMetaSchema, f =>
-      Seq(f.newGroup().append("qfp", qfp).append("cell_bits", cellBits.toLong)))
-
-  private def readStoreMeta(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String, what: String): (Long, Int) = {
-    val rows =
-      try graft.store.TinyParquet.readGroups(spark, path)
-      catch {
-        case e: java.io.FileNotFoundException =>
-          throw new IllegalStateException(
-            s"$what has no quantizer stamp at $path — rebuild the store " +
-              "with its save* function before serving or appending", e)
-      }
-    require(rows.length == 1, s"torn store meta at $path: ${rows.length} rows")
-    (graft.store.TinyParquet.long(rows.head, "qfp"),
-      graft.store.TinyParquet.long(rows.head, "cell_bits").toInt)
-  }
-
-  private def requireStamp(stored: Long, supplied: Long, what: String, dir: String): Unit =
-    require(stored == supplied,
-      s"$what at $dir was written under a DIFFERENT quantizer " +
-        s"(stored stamp $stored, supplied stamp $supplied) — serving or " +
-        "appending with mismatched centroids/codebooks silently returns " +
-        "wrong neighbors; retrain and rewrite the store, or load the " +
-        "matching quantizer artifacts")
-
   /** Persist [[assignIvfCells]]' assigned corpus as `<dir>/assigned`
     * parquet PARTITIONED BY the cell id — the physical layout that makes
     * [[ivfTopKAssigned]]'s probed-cell predicate a static partition
@@ -1794,7 +1753,7 @@ object Similarity {
       cents: Array[Array[Double]]): Unit = {
     assigned.write.mode("overwrite").partitionBy("cell")
       .parquet(s"$dir/assigned")
-    writeStoreMeta(spark, s"$dir/assigned_meta",
+    StoreMeta.write(spark, s"$dir/assigned_meta",
       quantizerFingerprint(cents), cellBits = -1)
   }
 
@@ -1808,8 +1767,8 @@ object Similarity {
   def loadIvfAssigned(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       cents: Array[Array[Double]]): DataFrame = {
-    val (stored, _) = readStoreMeta(spark, s"$dir/assigned_meta", "assigned store")
-    requireStamp(stored, quantizerFingerprint(cents), "assigned store", dir)
+    StoreMeta.verify(spark, s"$dir/assigned_meta", "assigned store",
+      "saveIvfAssigned", quantizerFingerprint(cents))
     spark.read.schema(assignedSchema).parquet(s"$dir/assigned")
   }
 
@@ -1848,8 +1807,8 @@ object Similarity {
       dir: String,
       batch: DataFrame,
       cents: Array[Array[Double]]): Unit = {
-    val (stored, _) = readStoreMeta(spark, s"$dir/assigned_meta", "assigned store")
-    requireStamp(stored, quantizerFingerprint(cents), "assigned store", dir)
+    StoreMeta.verify(spark, s"$dir/assigned_meta", "assigned store",
+      "saveIvfAssigned", quantizerFingerprint(cents))
     assignIvfCells(batch, cents).write.mode("append").partitionBy("cell")
       .parquet(s"$dir/assigned")
   }
@@ -1864,8 +1823,8 @@ object Similarity {
       dir: String,
       batch: DataFrame,
       books: Array[Array[Array[Double]]]): Unit = {
-    val (stored, cellBits) = readStoreMeta(spark, s"$dir/codes_meta", "PQ code store")
-    requireStamp(stored, bookFingerprint(books), "PQ code store", dir)
+    val cellBits = StoreMeta.verify(spark, s"$dir/codes_meta", "PQ code store",
+      "savePqCodes", bookFingerprint(books))
     encodePqCodes(batch, books, cellBits).write.mode("append")
       .partitionBy("cell").parquet(s"$dir/codes")
   }
@@ -1887,7 +1846,7 @@ object Similarity {
       cellBits: Int = 4): Unit = {
     codes.write.mode("overwrite").partitionBy("cell")
       .parquet(s"$dir/codes")
-    writeStoreMeta(spark, s"$dir/codes_meta", bookFingerprint(books), cellBits)
+    StoreMeta.write(spark, s"$dir/codes_meta", bookFingerprint(books), cellBits)
   }
 
   /** Restore [[savePqCodes]]' code table, verifying the caller's books
@@ -1898,8 +1857,8 @@ object Similarity {
   def loadPqCodes(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       books: Array[Array[Array[Double]]]): (DataFrame, Int) = {
-    val (stored, cellBits) = readStoreMeta(spark, s"$dir/codes_meta", "PQ code store")
-    requireStamp(stored, bookFingerprint(books), "PQ code store", dir)
+    val cellBits = StoreMeta.verify(spark, s"$dir/codes_meta", "PQ code store",
+      "savePqCodes", bookFingerprint(books))
     (spark.read.schema(codesSchema).parquet(s"$dir/codes"), cellBits)
   }
 
@@ -2017,7 +1976,8 @@ object Similarity {
     rows.foreach { r =>
       next(r.getInt(0))(r.getInt(1))(r.getInt(2)) = r.getDouble(3)
     }
-    val (_, cellBits) = readStoreMeta(spark, s"$inDir/codes_meta", "PQ code store")
+    val (_, cellBits) = StoreMeta.read(spark, s"$inDir/codes_meta",
+      "PQ code store", "savePqCodes")
     val encoded = Pins.pin(
       encodePqCodes(embeddings, next, cellBits, keepEmbedding = true))
     // both outputs read the one pinned encode pass — overlapped

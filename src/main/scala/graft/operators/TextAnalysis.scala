@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
+import graft.store.StoreMeta
 
 /** Text-analysis operators over the documents table: token statistics,
   * quality scoring, heuristic language ID, and content fingerprinting.
@@ -978,66 +979,6 @@ object TextAnalysis {
       .groupBy(col("doc_id"), col("tok"))
       .agg(count(lit(1)).as("tf"), sort_array(collect_list(col("pos"))).as("ps"))
 
-  /** Persist the positional postings as `<dir>/postings_pos` in the same
-    * tok-bucketed layout as [[saveBm25Index]] (plus the shared
-    * `<dir>/doclen`), so phrase serves prune exactly like term serves.
-    */
-  def saveBm25Positional(
-      spark: org.apache.spark.sql.SparkSession, dir: String, docs: DataFrame): Unit = {
-    // the saveBm25Index layout rules carry over: dl denormalized onto
-    // every posting row, 1-row stats sidecar, doclen as source of truth;
-    // the two output chains overlap as in saveBm25Index (guide §2.6) and
-    // the stats row folds from the just-written doclen file, pin-free
-    Par.run(
-      () => bucketedPostingsOnePass(docs, positional = true)
-        .write.mode("overwrite")
-        .partitionBy("tok_bucket").parquet(s"$dir/postings_pos"),
-      () => {
-        docLengthsPlan(docs).write.mode("overwrite").parquet(s"$dir/doclen")
-        val (nDocs, aTokens) = corpusStatsPair(
-          spark.read.schema(doclenSchema).parquet(s"$dir/doclen"))
-        writeStatsRow(spark, s"$dir/stats", nDocs, aTokens, accrete = false)
-      })
-  }
-
-  /** The store layout contract as an explicit read schema — the postings
-    * column set is FIXED by [[bucketedPostingsOnePass]], so a load never
-    * needs the per-invocation schema-inference footer job (the catalog-
-    * supplied-schema analogue, same rationale as the Tables cache; the
-    * round-trip specs pin supplied == inferred, so layout drift fails
-    * loudly there, not silently here). Feature detection for pre-dl /
-    * pre-bucket legacy stores stays: a driver-side footer field check and
-    * an fs partition-dir check pick the legacy column set, preserving the
-    * loud rebuild errors and the serve fallbacks those layouts route to.
-    */
-  private def storedPostingsSchema(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      positional: Boolean): org.apache.spark.sql.types.StructType = {
-    val base = "doc_id BIGINT, tok STRING, tf BIGINT" +
-      (if (positional) ", ps ARRAY<INT>" else "")
-    val dl =
-      if (graft.store.TinyParquet.schemaHasField(spark, path, "dl")) ", dl BIGINT"
-      else ""
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tb =
-      if (fs.listStatus(p).exists(s =>
-        s.isDirectory && s.getPath.getName.startsWith("tok_bucket=")))
-        ", tok_bucket INT"
-      else ""
-    org.apache.spark.sql.types.StructType.fromDDL(base + dl + tb)
-  }
-
-  private val doclenSchema =
-    org.apache.spark.sql.types.StructType.fromDDL("doc_id BIGINT, dl BIGINT")
-
-  /** Reload a [[saveBm25Positional]] store: (postings_pos, doclen). */
-  def loadBm25Positional(
-      spark: org.apache.spark.sql.SparkSession, dir: String): (DataFrame, DataFrame) =
-    (spark.read.schema(storedPostingsSchema(spark, s"$dir/postings_pos",
-        positional = true)).parquet(s"$dir/postings_pos"),
-      spark.read.schema(doclenSchema).parquet(s"$dir/doclen"))
-
   /** [[phraseTopK]] served from a stored positional index — identical
     * phrase occurrences and ranking by construction (same positions,
     * same integer weights); the phrase's term buckets prune the store
@@ -1051,22 +992,12 @@ object TextAnalysis {
     require(k > 0, "k must be positive")
     val terms = phrase.distinct
     val st = stats.getOrElse(Bm25Stats.of(doclen))
-    val hasDl = postingsPos.columns.contains("dl")
     // same pin discipline as bm25PerQueryFromIndex: doclen materializes
     // only when the serve will join it
-    val needDl = !hasDl
+    val needDl = !postingsPos.columns.contains("dl")
     val dl = if (needDl) Pins.pin(doclen.select(col("doc_id"), col("dl")))
       else doclen
-    val cols = Seq(col("doc_id"), col("tok"), col("tf"), col("ps")) ++
-      (if (hasDl) Seq(col("dl")) else Nil)
-    val post = Pins.pin(
-      if (postingsPos.columns.contains("tok_bucket")) {
-        val buckets = terms.map(t => h60Jvm(t) % Bm25Buckets).distinct
-        postingsPos
-          .filter(col("tok_bucket").isin(buckets: _*) &&
-            col("tok").isin(terms: _*))
-          .select(cols: _*)
-      } else postingsPos.filter(col("tok").isin(terms: _*)).select(cols: _*))
+    val post = Pins.pin(probedPostings(postingsPos, terms, "ps"))
     val out = scorePhrase(post, dl, phrase, k, st)
     if (needDl) Pins.release(dl)
     Pins.release(post)
@@ -1437,13 +1368,64 @@ object TextAnalysis {
       .sortWithinPartitions(col("tok_bucket"), col("tok"))
   }
 
+  /** The on-disk layout of one of the two BM25 postings kinds — what the
+    * one private body of each lifecycle operation is keyed by. Both
+    * kinds share a store dir's `doclen` and `stats` tables; each keeps
+    * its own postings dir and stamps its own meta next to it
+    * (`<postings>_meta`, the `assigned_meta` / `codes_meta` naming), so
+    * a plain and a positional store can share one version dir.
+    * `rebuild` is the save function a refusal names, `store` the
+    * deletion audit's store label.
+    */
+  private final case class PostingsLayout(
+      postings: String, positional: Boolean, rebuild: String, store: String) {
+    def what: String = if (positional) "positional BM25 store" else "BM25 store"
+
+    /** Refuse a store whose meta is missing, empty or of another format
+      * version — read FIRST by every load, append and delete.
+      */
+    def requireMeta(spark: org.apache.spark.sql.SparkSession, dir: String): Unit =
+      StoreMeta.read(spark, s"$dir/${postings}_meta", what, rebuild)
+
+    /** Stamp a store version ([[graft.store.StoreMeta]]: no quantizer, so
+      * `qfp` = 0, and no cell, so `cell_bits` = −1). Written LAST, once
+      * every table is in place: a crash before it leaves a version that
+      * refuses with the rebuild hint, never one that serves a partial
+      * write.
+      */
+    def stamp(spark: org.apache.spark.sql.SparkSession, dir: String): Unit =
+      StoreMeta.write(spark, s"$dir/${postings}_meta", qfp = 0L, cellBits = -1)
+
+    /** The postings column set, FIXED by [[bucketedPostingsOnePass]], as
+      * an explicit read schema — a load never pays the
+      * per-invocation schema-inference footer job (the catalog-supplied-
+      * schema analogue, same rationale as the Tables cache). The stamped
+      * meta is what vouches for the layout: a store without a current
+      * meta refuses before this schema is ever applied, and the
+      * round-trip specs pin supplied == inferred.
+      */
+    val schema: org.apache.spark.sql.types.StructType =
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "doc_id BIGINT, tok STRING, tf BIGINT" +
+          (if (positional) ", ps ARRAY<INT>" else "") +
+          ", dl BIGINT, tok_bucket INT")
+  }
+
+  private val TermPostings = PostingsLayout(
+    "postings", positional = false, rebuild = "saveBm25Index", store = "bm25")
+  private val PhrasePostings = PostingsLayout(
+    "postings_pos", positional = true, rebuild = "saveBm25Positional", store = "bm25_pos")
+
+  private val doclenSchema =
+    org.apache.spark.sql.types.StructType.fromDDL("doc_id BIGINT, dl BIGINT")
+
   /** Persist [[buildBm25Index]] as `<dir>/postings` + `<dir>/doclen` +
     * `<dir>/stats` parquet (BIGINT/VARCHAR only — trivially
-    * engine-portable): postings PARTITIONED BY `tok_bucket` with
-    * tok-sorted files (the [[Bm25Buckets]] pruning layout) and — the
-    * Lucene norms trick — each posting row DENORMALIZED with its
-    * document's `dl`, paid by one build-time join so the serve never
-    * joins the corpus-sized doclen table per query; `stats` is the
+    * engine-portable) plus the `<dir>/postings_meta` stamp: postings
+    * PARTITIONED BY `tok_bucket` with tok-sorted files (the
+    * [[Bm25Buckets]] pruning layout) and — the Lucene norms trick — each
+    * posting row DENORMALIZED with its document's `dl`, so the serve
+    * never joins the corpus-sized doclen table per query; `stats` is the
     * 1-row (n_docs, a_tokens) corpus sidecar, mergeable at append
     * (counts add) and rewritten at delete, so the serve reads corpus
     * statistics from one row instead of re-aggregating doclen per
@@ -1451,29 +1433,79 @@ object TextAnalysis {
     * deletion/stats source of truth (zero-token documents live only
     * there) — but a stats-equipped serve never scans it. At scale the
     * postings table is the corpus-sized artifact; writing it once per
-    * corpus version is the standard inverted-index trade. The `spark`
-    * parameter is kept only for API symmetry with [[loadBm25Index]]
-    * (both writes go through the DataFrame API).
+    * corpus version is the standard inverted-index trade.
     */
   def saveBm25Index(
-      spark: org.apache.spark.sql.SparkSession, dir: String, docs: DataFrame): Unit = {
+      spark: org.apache.spark.sql.SparkSession, dir: String, docs: DataFrame): Unit =
+    saveStore(spark, dir, docs, TermPostings)
+
+  /** Persist [[buildBm25Positional]]'s positional postings as
+    * `<dir>/postings_pos` in the same tok-bucketed, dl-denormalized
+    * layout as [[saveBm25Index]] (plus the shared `<dir>/doclen` and
+    * `<dir>/stats`, and the `<dir>/postings_pos_meta` stamp), so phrase
+    * serves prune exactly like term serves.
+    */
+  def saveBm25Positional(
+      spark: org.apache.spark.sql.SparkSession, dir: String, docs: DataFrame): Unit =
+    saveStore(spark, dir, docs, PhrasePostings)
+
+  private def saveStore(
+      spark: org.apache.spark.sql.SparkSession, dir: String, docs: DataFrame,
+      l: PostingsLayout): Unit = {
     // one-shuffle postings build (dl denormalized inline, no doc_id join,
-    // no separate write repartition) — see bucketedPostingsOnePass. The
-    // postings write and the doclen→stats chain are independent (each
-    // tokenizes its own pass), so they overlap (guide §2.6) — the
-    // doclen/stats jobs back-fill the postings write's task tail. The
-    // stats row folds from the just-written doclen file (narrow read,
-    // correct by construction), so nothing needs a pin.
+    // no separate write repartition) — see bucketedPostingsOnePass
+    writeTables(spark, dir, l, bucketedPostingsOnePass(docs, l.positional),
+      docLengthsPlan(docs), accrete = false)
+    l.stamp(spark, dir)
+  }
+
+  /** Write one lifecycle step's postings and doclen rows under `l`, with
+    * the stats sidecar row they imply — overwriting a new store version,
+    * or accreting onto an existing one (`accrete`). The postings write
+    * and the doclen → stats chain are independent (each reads its own
+    * pass), so they overlap (guide §2.6): the doclen/stats jobs back-fill
+    * the postings write's task tail. An overwrite folds the stats row
+    * from the just-written doclen file (narrow read, correct by
+    * construction); an accretion can't isolate its batch in the accreted
+    * doclen dir, so it folds a RECOMPUTE of the batch's narrow dl plan —
+    * equal to the rows just written only when the batch is deterministic
+    * (tokenize is; the caller's batch frame must be too).
+    */
+  private def writeTables(
+      spark: org.apache.spark.sql.SparkSession, dir: String, l: PostingsLayout,
+      postings: DataFrame, dl: DataFrame, accrete: Boolean): Unit = {
+    val mode = if (accrete) "append" else "overwrite"
     Par.run(
-      () => bucketedPostingsOnePass(docs, positional = false)
-        .write.mode("overwrite")
-        .partitionBy("tok_bucket").parquet(s"$dir/postings"),
+      () => postings.write.mode(mode).partitionBy("tok_bucket")
+        .parquet(s"$dir/${l.postings}"),
       () => {
-        docLengthsPlan(docs).write.mode("overwrite").parquet(s"$dir/doclen")
+        dl.write.mode(mode).parquet(s"$dir/doclen")
         val (nDocs, aTokens) = corpusStatsPair(
-          spark.read.schema(doclenSchema).parquet(s"$dir/doclen"))
-        writeStatsRow(spark, s"$dir/stats", nDocs, aTokens, accrete = false)
+          if (accrete) dl else spark.read.schema(doclenSchema).parquet(s"$dir/doclen"))
+        writeStatsRow(spark, s"$dir/stats", nDocs, aTokens, accrete)
       })
+  }
+
+  /** Reload a [[saveBm25Index]] store: (postings, doclen), after checking
+    * its stamp.
+    */
+  def loadBm25Index(
+      spark: org.apache.spark.sql.SparkSession, dir: String): (DataFrame, DataFrame) =
+    loadStore(spark, dir, TermPostings)
+
+  /** Reload a [[saveBm25Positional]] store: (postings_pos, doclen), after
+    * checking its stamp.
+    */
+  def loadBm25Positional(
+      spark: org.apache.spark.sql.SparkSession, dir: String): (DataFrame, DataFrame) =
+    loadStore(spark, dir, PhrasePostings)
+
+  private def loadStore(
+      spark: org.apache.spark.sql.SparkSession, dir: String,
+      l: PostingsLayout): (DataFrame, DataFrame) = {
+    l.requireMeta(spark, dir)
+    (spark.read.schema(l.schema).parquet(s"$dir/${l.postings}"),
+      spark.read.schema(doclenSchema).parquet(s"$dir/doclen"))
   }
 
   /** The 1-row (n_docs, a_tokens) corpus-statistics frame the BM25
@@ -1570,20 +1602,25 @@ object TextAnalysis {
     */
   def loadBm25Stats(
       spark: org.apache.spark.sql.SparkSession, dir: String): Option[Bm25Stats] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/stats")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      // the sidecar is one BIGINT pair per append batch — summed ON THE
-      // DRIVER (TinyParquet; BIGINT addition, order-free), replacing the
-      // schema-inference + aggregate-collect job pair every stored serve
-      // and every append gate previously paid. Values still come from
-      // the store files per invocation.
-      val rows = graft.store.TinyParquet.readGroups(spark, s"$dir/stats")
-      val nDocs = rows.map(g => graft.store.TinyParquet.long(g, "n_docs")).sum
-      val aTokens = rows.map(g => graft.store.TinyParquet.long(g, "a_tokens")).sum
-      if (nDocs == 0L) None else Some(Bm25Stats(nDocs, aTokens))
-    }
+    val rows = statsRows(spark, dir)
+    val nDocs = rows.map(_._1).sum
+    if (nDocs == 0L) None else Some(Bm25Stats(nDocs, rows.map(_._2).sum))
+  }
+
+  /** The sidecar's committed per-batch (n_docs, a_tokens) rows, none
+    * when the store has no stats dir. One BIGINT pair per append batch,
+    * so it is read ON THE DRIVER (TinyParquet), never by a Spark job;
+    * values still come from the store files per invocation.
+    */
+  private def statsRows(
+      spark: org.apache.spark.sql.SparkSession, dir: String): Seq[(Long, Long)] =
+    if (!exists(spark, s"$dir/stats")) Nil
+    else graft.store.TinyParquet.readGroups(spark, s"$dir/stats").map(g =>
+      (graft.store.TinyParquet.long(g, "n_docs"), graft.store.TinyParquet.long(g, "a_tokens")))
+
+  private def exists(spark: org.apache.spark.sql.SparkSession, path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
   /** Full consistency check over all three tables of a
@@ -1613,15 +1650,8 @@ object TextAnalysis {
   def verifyBm25Stats(
       spark: org.apache.spark.sql.SparkSession, dir: String): Boolean = {
     import spark.implicits._
-    val hconf = spark.sparkContext.hadoopConfiguration
-    def exists(p: String) = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(hconf).exists(hp)
-    }
-    val postPath =
-      if (exists(s"$dir/postings")) Some(s"$dir/postings")
-      else if (exists(s"$dir/postings_pos")) Some(s"$dir/postings_pos")
-      else None
+    val postPath = Seq(TermPostings, PhrasePostings)
+      .map(l => s"$dir/${l.postings}").find(exists(spark, _))
     (loadBm25Stats(spark, dir), postPath) match {
       case (Some(st), Some(pp)) =>
         val sidecar = (st.nDocs, st.aTokens)
@@ -1643,62 +1673,34 @@ object TextAnalysis {
   /** Per-micro-batch maintenance of a [[saveBm25Index]] store — the
     * streaming twin of the one-shot build, in the house foreachBatch
     * shape (boilerplate-df / corpus-card / HLL maintenance): each batch's
-    * postings and doc-length rows APPEND to the stored parquet tables.
-    * Because every document lives in exactly one batch, each (doc_id,
-    * tok) posting and (doc_id, dl) row exists exactly once across
-    * appends — the accreted files ARE the union-merged state, no
-    * compaction read-modify-write — so serving [[bm25TopKFromIndex]]
-    * from the store is identical to one-shot indexing of every document
-    * seen (StreamingOpsSpec asserts the equality per batch).
+    * postings and doc-length rows APPEND to the stored parquet tables,
+    * and one (n_docs, a_tokens) row appends to the stats sidecar
+    * ([[loadBm25Stats]] sums them — mergeable state, no file a live
+    * reader holds is ever overwritten). Because every document lives in
+    * exactly one batch, each (doc_id, tok) posting and (doc_id, dl) row
+    * exists exactly once across appends — the accreted files ARE the
+    * union-merged state, no compaction read-modify-write — so serving
+    * [[bm25TopKFromIndex]] from the store is identical to one-shot
+    * indexing of every document seen (StreamingOpsSpec asserts the
+    * equality per batch). The first append into an empty dir creates
+    * the store and stamps its meta; every later one checks the stamp and
+    * the stats sidecar before any write lands.
     *
     * Contract: batches are DISJOINT document sets (the append-only-crawl
-    * shape, same contract the TextOpsSpec union-merge case proves); a
-    * REPLAYED batch would double-count its documents' tf and dl — run
-    * under foreachBatch with batch-id idempotence (write each batch to a
-    * `v<id>` path and skip existing, as the maintenance specs do) or
-    * dedup redeliveries upstream for at-least-once sources.
+    * shape, same contract the TextOpsSpec union-merge case proves) AND
+    * DETERMINISTIC frames — the stats row is refolded from a recompute of
+    * the batch plan, so a batch whose rows change between evaluations
+    * (an upstream sample, limit, or shuffle-order-dependent pick) writes
+    * a sidecar that disagrees with its doclen rows, which
+    * [[verifyBm25Stats]] later flags. A REPLAYED batch would double-count
+    * its documents' tf and dl — run under foreachBatch with batch-id
+    * idempotence (write each batch to a `v<id>` path and skip existing,
+    * as the maintenance specs do) or dedup redeliveries upstream for
+    * at-least-once sources.
     */
   def appendBm25Index(
-      spark: org.apache.spark.sql.SparkSession, dir: String, batch: DataFrame): Unit = {
-    val hasData = requireBucketedLayout(spark, s"$dir/postings")
-    if (hasData) {
-      // both legacy-layout checks fire BEFORE any write, so a refused
-      // append leaves the store untouched; the dl check is a footer-only
-      // driver read (TinyParquet) — the full schema-inference job it
-      // replaces was one of the per-append chain-latency costs
-      require(graft.store.TinyParquet.schemaHasField(spark, s"$dir/postings", "dl"),
-        s"postings store at $dir lacks the denormalized dl column — " +
-          "rebuild it with saveBm25Index before appending (mixed row " +
-          "schemas would corrupt the serve)")
-      require(loadBm25Stats(spark, dir).isDefined,
-        s"store at $dir has postings but no stats sidecar — rebuild it " +
-          "with saveBm25Index before appending")
-    }
-    val dl = docLengthsPlan(batch)
-    // one appended stats row per batch; loadBm25Stats sums them
-    // (mergeable state — no file a live reader holds is ever
-    // overwritten). The postings append overlaps the doclen → stats
-    // chain (guide §2.6). The stats pair folds from a RECOMPUTE of the
-    // narrow dl plan (tokenize is deterministic, so it equals the rows
-    // just written; the accreted doclen dir can't isolate this batch),
-    // which benched at parity with the localCheckpoint pin it replaces
-    // minus the pin job. Crash analysis: whichever writes land, every
-    // torn combination leaves some PAIR of the three tables
-    // inconsistent — stats behind/ahead of doclen fails the
-    // sidecar ↔ doclen reconciliation, and postings behind/ahead of
-    // doclen fails the postings ↔ doclen one — so [[verifyBm25Stats]]
-    // catches every crash state, exactly as it did under the strictly
-    // ordered write chain.
-    Par.run(
-      () => bucketedPostingsOnePass(batch, positional = false)
-        .write.mode("append")
-        .partitionBy("tok_bucket").parquet(s"$dir/postings"),
-      () => {
-        dl.write.mode("append").parquet(s"$dir/doclen")
-        val (nDocs, aTokens) = corpusStatsPair(dl)
-        writeStatsRow(spark, s"$dir/stats", nDocs, aTokens, accrete = true)
-      })
-  }
+      spark: org.apache.spark.sql.SparkSession, dir: String, batch: DataFrame): Unit =
+    appendStore(spark, dir, batch, TermPostings)
 
   /** [[appendBm25Index]] for the POSITIONAL phrase store — the accretion
     * path that lets a crawl keep the phrase index current per
@@ -1706,74 +1708,37 @@ object TextAnalysis {
     * are per-document state, so disjoint batches' positional postings
     * union-merge exactly like the plain tf postings (each (doc_id, tok)
     * row with its sorted in-document positions exists once across
-    * appends); doclen and the (n_docs, a_tokens) stats sidecar accrete
-    * identically to [[appendBm25Index]], and the same disjoint-batch /
+    * appends); the same disjoint, deterministic-batch and
     * batch-id-idempotence contract applies. Serving
     * [[phraseTopKFromIndex]] from the accreted store ≡ one-shot
     * [[saveBm25Positional]] of every document seen (spec-proven).
     */
   def appendBm25Positional(
-      spark: org.apache.spark.sql.SparkSession, dir: String, batch: DataFrame): Unit = {
-    val hasData = requireBucketedLayout(spark, s"$dir/postings_pos",
-      rebuildHint = "saveBm25Positional")
-    if (hasData) {
-      // footer-only dl gate, as in appendBm25Index
-      require(graft.store.TinyParquet.schemaHasField(spark, s"$dir/postings_pos", "dl"),
-        s"positional store at $dir lacks the denormalized dl column — " +
-          "rebuild it with saveBm25Positional before appending (mixed row " +
-          "schemas would corrupt the serve)")
-      require(loadBm25Stats(spark, dir).isDefined,
-        s"store at $dir has positional postings but no stats sidecar — " +
-          "rebuild it with saveBm25Positional before appending")
-    }
-    val dl = docLengthsPlan(batch)
-    // overlapped append chains, same crash analysis and pin-free
-    // stats-recompute rationale as [[appendBm25Index]]
-    Par.run(
-      () => bucketedPostingsOnePass(batch, positional = true)
-        .write.mode("append").partitionBy("tok_bucket")
-        .parquet(s"$dir/postings_pos"),
-      () => {
-        dl.write.mode("append").parquet(s"$dir/doclen")
-        val (nDocs, aTokens) = corpusStatsPair(dl)
-        writeStatsRow(spark, s"$dir/stats", nDocs, aTokens, accrete = true)
-      })
-  }
+      spark: org.apache.spark.sql.SparkSession, dir: String, batch: DataFrame): Unit =
+    appendStore(spark, dir, batch, PhrasePostings)
 
-  /** Layout guard for [[appendBm25Index]]: appending `tok_bucket=`-
-    * partitioned files onto a store written under the pre-bucketed flat
-    * layout yields a mixed directory Spark's partition discovery rejects
-    * (or silently misreads as a partial partition column) — fail loudly
-    * with a rebuild message instead. A nonexistent path is fine (first
-    * append creates the store); an existing path must already contain
-    * `tok_bucket=*` directories. Returns whether the store already has
-    * data (the stats-sidecar bootstrap signal).
-    */
-  private def requireBucketedLayout(
-      spark: org.apache.spark.sql.SparkSession, postingsPath: String,
-      rebuildHint: String = "saveBm25Index"): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(postingsPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) false
-    else {
-      val hasData = fs.listStatus(p).exists(s =>
-        !s.getPath.getName.startsWith("_"))
-      val bucketed = fs.listStatus(p).exists(s =>
-        s.isDirectory && s.getPath.getName.startsWith("tok_bucket="))
-      require(!hasData || bucketed,
-        s"postings store at $postingsPath uses the pre-bucketed flat layout — " +
-          s"rebuild it with $rebuildHint before appending (mixed layouts break " +
-          "partition discovery)")
-      hasData
+  private def appendStore(
+      spark: org.apache.spark.sql.SparkSession, dir: String, batch: DataFrame,
+      l: PostingsLayout): Unit = {
+    val fresh = !exists(spark, s"$dir/${l.postings}")
+    if (!fresh) {
+      // both checks fire BEFORE any write, so a refused append leaves the
+      // store untouched
+      l.requireMeta(spark, dir)
+      require(statsRows(spark, dir).nonEmpty,
+        s"${l.what} at $dir has postings but no stats sidecar — rebuild " +
+          s"it with ${l.rebuild} before appending")
     }
+    // Crash analysis: whichever of the overlapped writes land, every torn
+    // combination leaves some PAIR of the three tables inconsistent —
+    // stats behind/ahead of doclen fails the sidecar ↔ doclen
+    // reconciliation, and postings behind/ahead of doclen fails the
+    // postings ↔ doclen one — so [[verifyBm25Stats]] catches every crash
+    // state, exactly as it did under the strictly ordered write chain.
+    writeTables(spark, dir, l, bucketedPostingsOnePass(batch, l.positional),
+      docLengthsPlan(batch), accrete = true)
+    if (fresh) l.stamp(spark, dir)
   }
-
-  /** Reload a [[saveBm25Index]] store: (postings, doclen). */
-  def loadBm25Index(
-      spark: org.apache.spark.sql.SparkSession, dir: String): (DataFrame, DataFrame) =
-    (spark.read.schema(storedPostingsSchema(spark, s"$dir/postings",
-        positional = false)).parquet(s"$dir/postings"),
-      spark.read.schema(doclenSchema).parquet(s"$dir/doclen"))
 
   /** Data-subject deletion THROUGH the postings store — the composition
     * of [[graft.streaming.Maintenance.deleteWhere]] with the inverted
@@ -1799,83 +1764,65 @@ object TextAnalysis {
       spark: org.apache.spark.sql.SparkSession,
       inDir: String,
       outDir: String,
-      pred: Column): DataFrame = {
-    require(inDir != outDir,
-      "deletion rewrites a NEW store version — outDir must differ from inDir")
-    val (postings, dl) = loadBm25Index(spark, inDir)
-    require(postings.columns.contains("dl"),
-      s"postings store at $inDir lacks the denormalized dl column — " +
-        "rebuild it with saveBm25Index before deleting (legacy layout)")
-    val hit = coalesce(pred, lit(false))
-    val (survDl, audit) = graft.streaming.Maintenance.deleteWhere(
-      dl.withColumn("store", lit("bm25")), pred, Seq("store"), col("doc_id"))
-    // survivor postings rewrite and the doclen → stats chain are
-    // independent reads of the (immutable) v1 store — overlapped
-    // (guide §2.6). The rewrite is SHUFFLE-FREE: the v1 store is already
-    // tok_bucket-partitioned with tok-sorted files, and a row filter
-    // preserves both, so survivors keep their stored bucket column and
-    // only re-sort locally (a task that concatenated several input files
-    // must restore the per-file order) — the previous form re-shuffled
-    // the entire surviving corpus through repartition(tok_bucket, tok)
-    // to recompute a layout it already had.
-    Par.run(
-      () => postings.filter(!hit)
-        .select(col("doc_id"), col("tok"), col("tf"), col("dl"),
-          col("tok_bucket"))
-        .sortWithinPartitions(col("tok_bucket"), col("tok"))
-        .write.mode("overwrite").partitionBy("tok_bucket")
-        .parquet(s"$outDir/postings"),
-      () => {
-        survDl.drop("store").write.mode("overwrite").parquet(s"$outDir/doclen")
-        // survivor corpus stats re-derive from the new version's own doclen
-        val (nDocs, aTokens) = corpusStatsPair(
-          spark.read.schema(doclenSchema).parquet(s"$outDir/doclen"))
-        writeStatsRow(spark, s"$outDir/stats", nDocs, aTokens, accrete = false)
-      })
-    audit
-  }
+      pred: Column): DataFrame =
+    deleteFromStore(spark, inDir, outDir, pred, TermPostings)
 
   /** [[deleteFromBm25Index]] for the POSITIONAL phrase store: documents
     * matching `pred` are removed from both the positional postings and
-    * the shared doclen table, survivors rewrite as a new store version
-    * at `outDir` (same version-swap rule), and the returned one-row
-    * tombstone audit carries n_deleted / n_kept / the Σ (h60(doc_id)
-    * mod 1000003) erasure fingerprint. Positions are per-document state
-    * and df/N/avg-dl re-derive at serve time, so phrase serving the
-    * survivor store ≡ serving a from-scratch positional index of the
-    * surviving corpus (oracle-proven hash-exact in q_phrase_delete).
-    * Survivor postings rewrite through the same bucket/sort layout as
-    * [[saveBm25Positional]], so term-bucket pruning carries over.
+    * the shared doclen table under the same version-swap rule and audit.
+    * Positions are per-document state and df/N/avg-dl re-derive at serve
+    * time, so phrase serving the survivor store ≡ serving a from-scratch
+    * positional index of the surviving corpus (oracle-proven hash-exact
+    * in q_phrase_delete).
     */
   def deleteFromBm25Positional(
       spark: org.apache.spark.sql.SparkSession,
       inDir: String,
       outDir: String,
-      pred: Column): DataFrame = {
+      pred: Column): DataFrame =
+    deleteFromStore(spark, inDir, outDir, pred, PhrasePostings)
+
+  private def deleteFromStore(
+      spark: org.apache.spark.sql.SparkSession, inDir: String, outDir: String,
+      pred: Column, l: PostingsLayout): DataFrame = {
     require(inDir != outDir,
       "deletion rewrites a NEW store version — outDir must differ from inDir")
-    val (postingsPos, dl) = loadBm25Positional(spark, inDir)
-    require(postingsPos.columns.contains("dl"),
-      s"positional store at $inDir lacks the denormalized dl column — " +
-        "rebuild it with saveBm25Positional before deleting (legacy layout)")
+    val (postings, dl) = loadStore(spark, inDir, l)
     val hit = coalesce(pred, lit(false))
     val (survDl, audit) = graft.streaming.Maintenance.deleteWhere(
-      dl.withColumn("store", lit("bm25_pos")), pred, Seq("store"), col("doc_id"))
-    // overlapped and shuffle-free as in [[deleteFromBm25Index]]
-    Par.run(
-      () => postingsPos.filter(!hit)
-        .select(col("doc_id"), col("tok"), col("tf"), col("ps"), col("dl"),
-          col("tok_bucket"))
-        .sortWithinPartitions(col("tok_bucket"), col("tok"))
-        .write.mode("overwrite").partitionBy("tok_bucket")
-        .parquet(s"$outDir/postings_pos"),
-      () => {
-        survDl.drop("store").write.mode("overwrite").parquet(s"$outDir/doclen")
-        val (nDocs, aTokens) = corpusStatsPair(
-          spark.read.schema(doclenSchema).parquet(s"$outDir/doclen"))
-        writeStatsRow(spark, s"$outDir/stats", nDocs, aTokens, accrete = false)
-      })
+      dl.withColumn("store", lit(l.store)), pred, Seq("store"), col("doc_id"))
+    // The survivor rewrite is SHUFFLE-FREE: the v1 store is already
+    // tok_bucket-partitioned with tok-sorted files, and a row filter
+    // preserves both, so survivors keep their stored bucket column and
+    // only re-sort locally (a task that concatenated several input files
+    // must restore the per-file order). Survivor corpus stats re-derive
+    // from the new version's own doclen.
+    writeTables(spark, outDir, l,
+      postings.filter(!hit).select(l.schema.fieldNames.toSeq.map(col): _*)
+        .sortWithinPartitions(col("tok_bucket"), col("tok")),
+      survDl.drop("store"), accrete = false)
+    l.stamp(spark, outDir)
     audit
+  }
+
+  /** The stored postings rows of `terms` — doc_id, tok, tf, the `extra`
+    * columns, and dl where the postings carry it. On a bucketed store the
+    * terms' `tok_bucket`s (derived driver-side, h60Jvm ≡ h60) go down as
+    * a static PARTITION filter ahead of the residual `tok IN`, so the
+    * scan lists only the probed buckets' directories; in-memory
+    * [[buildBm25Index]] postings carry neither dl nor tok_bucket and
+    * take the plain filter.
+    */
+  private def probedPostings(
+      postings: DataFrame, terms: Seq[String], extra: String*): DataFrame = {
+    val cols = (Seq("doc_id", "tok", "tf") ++ extra ++
+      Seq("dl").filter(postings.columns.contains)).map(col)
+    if (postings.columns.contains("tok_bucket")) {
+      val buckets = terms.map(t => h60Jvm(t) % Bm25Buckets).distinct
+      postings
+        .filter(col("tok_bucket").isin(buckets: _*) && col("tok").isin(terms: _*))
+        .select(cols: _*)
+    } else postings.filter(col("tok").isin(terms: _*)).select(cols: _*)
   }
 
   /** [[bm25TopK]] served from a prebuilt/reloaded index instead of the
@@ -1898,15 +1845,7 @@ object TextAnalysis {
     // scale, the sidecar is the 100 TB path)
     val st = stats.getOrElse(Bm25Stats.of(doclen))
     val hasDl = postings.columns.contains("dl")
-    val cols = Seq(col("doc_id"), col("tok"), col("tf")) ++
-      (if (hasDl) Seq(col("dl")) else Nil)
-    val tf =
-      if (postings.columns.contains("tok_bucket")) {
-        val buckets = terms.map(t => h60Jvm(t) % Bm25Buckets).distinct
-        postings
-          .filter(col("tok_bucket").isin(buckets: _*) && col("tok").isin(terms: _*))
-          .select(cols: _*)
-      } else postings.filter(col("tok").isin(terms: _*)).select(cols: _*)
+    val tf = probedPostings(postings, terms)
     val dfreq = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     // dl rides the posting rows on a denormalized store — no doclen join
     (if (hasDl) tf else tf.join(doclen, Seq("doc_id")))
@@ -2050,22 +1989,12 @@ object TextAnalysis {
     val termSeq = qt.select(col("tok")).distinct()
       .collect().map(_.getString(0)).toSeq
     val st = stats.getOrElse(Bm25Stats.of(doclen))
-    val hasDl = postings.columns.contains("dl")
     // doclen is corpus-row-sized: pin (an eager materialization) ONLY
     // when the serve will join it — a dl-denormalized store never does
-    val needDl = !hasDl
+    val needDl = !postings.columns.contains("dl")
     val dl = if (needDl) Pins.pin(doclen.select(col("doc_id"), col("dl")))
       else doclen
-    val cols = Seq(col("doc_id"), col("tok"), col("tf")) ++
-      (if (hasDl) Seq(col("dl")) else Nil)
-    val tf = Pins.pin(
-      if (postings.columns.contains("tok_bucket")) {
-        val buckets = termSeq.map(t => h60Jvm(t) % Bm25Buckets).distinct
-        postings
-          .filter(col("tok_bucket").isin(buckets: _*) &&
-            col("tok").isin(termSeq: _*))
-          .select(cols: _*)
-      } else postings.filter(col("tok").isin(termSeq: _*)).select(cols: _*))
+    val tf = Pins.pin(probedPostings(postings, termSeq))
     val out = scorePerQuery(tf, dl, qt, k, salts, st)
     Pins.release(qt)
     if (needDl) Pins.release(dl)

@@ -7,13 +7,12 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter, ParquetReader}
+import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetReader}
 import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.SparkSession
 
 /** Driver-side parquet I/O for METADATA-sized store sidecars (the 1-row
-  * quantizer stamps, the per-batch corpus-stats rows, the cells×dim
+  * [[StoreMeta]] stamps, the per-batch corpus-stats rows, the cells×dim
   * centroid/codebook tables — tens of bytes to a few KB each).
   *
   * Reading 16 bytes through a distributed Spark job costs a full
@@ -37,8 +36,7 @@ object TinyParquet {
   private def conf(spark: SparkSession): Configuration =
     spark.sparkContext.hadoopConfiguration
 
-  private def dataFiles(
-      spark: SparkSession, dir: String, recursive: Boolean): Seq[Path] = {
+  private def dataFiles(spark: SparkSession, dir: String): Seq[Path] = {
     val p = new Path(dir)
     val fs = p.getFileSystem(conf(spark))
     if (!fs.exists(p)) throw new java.io.FileNotFoundException(
@@ -47,15 +45,10 @@ object TinyParquet {
       val n = s.getPath.getName
       !n.startsWith("_") && !n.startsWith(".")
     }
-    val out = ArrayBuffer[Path]()
-    def walk(d: Path): Unit = fs.listStatus(d).filter(visible).foreach { s =>
-      if (s.isDirectory) { if (recursive) walk(s.getPath) }
-      else if (s.getLen > 0) out += s.getPath
-    }
-    walk(p)
     // deterministic file order (FileSystem.listStatus order is
     // unspecified); row order within a file is the written order
-    out.sortBy(_.toString).toSeq
+    fs.listStatus(p).toSeq.filter(s => visible(s) && !s.isDirectory && s.getLen > 0)
+      .map(_.getPath).sortBy(_.toString)
   }
 
   /** Every row of every data file directly under `dir`, as parquet
@@ -64,7 +57,7 @@ object TinyParquet {
     */
   def readGroups(spark: SparkSession, dir: String): Seq[Group] = {
     val out = ArrayBuffer[Group]()
-    dataFiles(spark, dir, recursive = false).foreach { f =>
+    dataFiles(spark, dir).foreach { f =>
       val r = ParquetReader.builder(new GroupReadSupport(), f)
         .withConf(conf(spark)).build()
       try {
@@ -104,19 +97,6 @@ object TinyParquet {
       case other => throw new IllegalStateException(
         s"field $field is $other, expected a floating-point type")
     }
-  }
-
-  /** Whether the parquet schema of the FIRST data file under `dir`
-    * (recursive — partitioned stores keep files below `col=` dirs)
-    * contains `field` — the footer-only layout gate that previously cost
-    * a full `spark.read.parquet(...).columns` inference job per append.
-    */
-  def schemaHasField(spark: SparkSession, dir: String, field: String): Boolean = {
-    val files = dataFiles(spark, dir, recursive = true)
-    require(files.nonEmpty, s"no data files under $dir")
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(files.head, conf(spark)))
-    try r.getFileMetaData.getSchema.containsField(field)
-    finally r.close()
   }
 
   /** Overwrite `dir` with ONE parquet file holding `rows` (built against

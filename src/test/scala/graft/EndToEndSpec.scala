@@ -476,6 +476,8 @@ class EndToEndSpec extends SparkSpec {
             .write.parquet(s"$root/bm25/v2/doclen")
           spark.read.parquet(s"$v1/stats").coalesce(1)
             .write.parquet(s"$root/bm25/v2/stats")
+          spark.read.parquet(s"$v1/postings_meta").coalesce(1)
+            .write.parquet(s"$root/bm25/v2/postings_meta")
           StoreCatalog.publish(spark, cat, "bm25", s"$root/bm25/v2")
           serveAndAssert()
           assert(StoreCatalog.gcSuperseded(spark, cat, "bm25", s"$root/bm25",

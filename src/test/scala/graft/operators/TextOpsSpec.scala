@@ -2961,9 +2961,11 @@ class TextOpsSpec extends SparkSpec {
     TextAnalysis.saveBm25Index(spark, s"$wd/survfresh", surv)
     assert(TextAnalysis.loadBm25Stats(spark, s"$wd/tf2").get
       === TextAnalysis.loadBm25Stats(spark, s"$wd/survfresh").get)
-    // a legacy store with postings but no sidecar refuses appends
+    // a legacy store with postings but no sidecar refuses appends (its
+    // meta is current, so the refusal is the sidecar check's)
     val legacy = s"$wd/legacy"
     bucketedWrite(legacy, Seq((1L, "alpha", 1L, 1L)))
+    graft.store.StoreMeta.write(spark, s"$legacy/postings_meta", qfp = 0L, cellBits = -1)
     val e = intercept[IllegalArgumentException] {
       TextAnalysis.appendBm25Index(spark, legacy, allDocs.limit(3))
     }
@@ -3024,10 +3026,11 @@ class TextOpsSpec extends SparkSpec {
     Seq((1L, "alpha", 1L)).toDF("doc_id", "tok", "tf")
       .write.parquet(s"$dir/postings")
     Seq((1L, 1L)).toDF("doc_id", "dl").write.parquet(s"$dir/doclen")
-    val e = intercept[IllegalArgumentException] {
+    val e = intercept[IllegalStateException] {
       TextAnalysis.appendBm25Index(spark, dir, docs.limit(5))
     }
-    assert(e.getMessage.contains("flat layout"))
+    assert(e.getMessage.contains("rebuild the store with saveBm25Index"))
+    assert(!new java.io.File(s"$dir/stats").exists, "refused before any write")
   }
 
   test("one-shot similarity paths release every pin they take") {

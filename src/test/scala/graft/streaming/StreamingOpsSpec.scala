@@ -1117,15 +1117,16 @@ class StreamingOpsSpec extends SparkSpec {
     assert(TextAnalysis.verifyBm25Stats(spark, s"$dir/store"))
     // zero-token doc counted toward N through doclen, as in the tf store
     assert(dl.count() === all.size)
-    // legacy-layout refusal: a flat (unbucketed) positional store refuses
-    // appends before any write lands
+    // legacy-layout refusal: a flat (unbucketed) positional store, written
+    // without a store meta, refuses appends before any write lands
     Seq((1L, "alpha", 1L, Array(0L), 1L)).toDF("doc_id", "tok", "tf", "ps", "dl")
       .write.parquet(s"$dir/legacyflat/postings_pos")
-    val e = intercept[IllegalArgumentException] {
+    val e = intercept[IllegalStateException] {
       TextAnalysis.appendBm25Positional(spark, s"$dir/legacyflat",
         all.take(2).toDF("doc_id", "text"))
     }
     assert(e.getMessage.contains("saveBm25Positional"))
+    assert(!new java.io.File(s"$dir/legacyflat/stats").exists, "refused before any write")
   }
 
   test("streaming embedding-moments maintenance: per-batch merge equals the one-shot state") {
