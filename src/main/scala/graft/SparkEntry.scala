@@ -30,6 +30,22 @@ object SparkEntry {
   private def qs(s: SparkSession, dir: String): QueryService =
     QueryService(idx(s, dir))
 
+  /** A registry query's scratch dir under the work root: `<tag>-` plus
+    * the testdata dir with every char outside [A-Za-z0-9.] mapped to `_`.
+    */
+  private def workDir(tag: String, dir: String): String =
+    s"${graft.streaming.PersistPipeline.workRoot}/$tag-${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+
+  /** `served` with a deletion's one-row tombstone audit cross-joined: a
+    * grouping-free re-aggregate of the 1-row audit — the structurally
+    * bounded scalar-build shape the no-cartesian audit admits.
+    */
+  private def withDeleteAudit(audit: DataFrame)(served: DataFrame): DataFrame =
+    served.crossJoin(broadcast(audit.agg(
+      max(col("n_deleted")).as("n_deleted"),
+      max(col("n_kept")).as("n_kept"),
+      max(col("del_fp_sum")).as("del_fp_sum"))))
+
   /** Composed resubmitter over the index store and the persist run's real
     * written Avro records (the replay's record source, S6/D2).
     */
@@ -59,7 +75,7 @@ object SparkEntry {
     private val ran = new java.util.concurrent.ConcurrentHashMap[String, String]()
     def ensure(s: SparkSession, dir: String): String =
       ran.computeIfAbsent(dir, { d =>
-        val wd = s"${graft.streaming.PersistPipeline.workRoot}/stream-${d.replaceAll("[^A-Za-z0-9.]", "_")}"
+        val wd = workDir("stream", d)
         graft.streaming.PersistPipeline.deleteRecursively(java.nio.file.Paths.get(wd))
         // file-source streams read a DIRECTORY of arriving files — stage
         // the bounded table as that directory
@@ -745,7 +761,7 @@ object SparkEntry {
     "q_ivf_stored" -> { (s, dir) =>
       val emb = Tables(s, dir).embeddings
       val cents = Similarity.kmeansCentroids(emb, numCells = 8, iters = 2)
-      val wd = s"${graft.streaming.PersistPipeline.workRoot}/ann-${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+      val wd = workDir("ann", dir)
       Similarity.saveIvfIndex(s, wd, cents, Some(Similarity.cellStats(emb, cents)))
       Similarity.ivfTopKWithCentroids(emb, col("vec_id") % 50 === 0, 5,
         Similarity.loadIvfCentroids(s, wd), nprobe = 8)
@@ -761,7 +777,7 @@ object SparkEntry {
     "q_ivf_assigned" -> { (s, dir) =>
       val emb = Tables(s, dir).embeddings
       val cents = Similarity.kmeansCentroids(emb, numCells = 8, iters = 2)
-      val wd = s"${graft.streaming.PersistPipeline.workRoot}/annasg-${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+      val wd = workDir("annasg", dir)
       Similarity.saveIvfIndex(s, wd, cents)
       Similarity.saveIvfAssigned(s, wd, Similarity.assignIvfCells(emb, cents), cents)
       // the load verifies the restored quantizer against the store stamp
@@ -779,19 +795,14 @@ object SparkEntry {
     "q_ann_delete" -> { (s, dir) =>
       val emb = Tables(s, dir).embeddings
       val cents = Similarity.kmeansCentroids(emb, numCells = 8, iters = 2)
-      val wd = s"${graft.streaming.PersistPipeline.workRoot}/anndel-${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+      val wd = workDir("anndel", dir)
       Similarity.saveIvfAssigned(s, s"$wd/v1",
         Similarity.assignIvfCells(emb, cents), cents)
       val audit = Similarity.deleteFromIvfAssigned(
         s, s"$wd/v1", s"$wd/v2", col("vec_id") % 5 === 2, cents)
       Similarity.ivfTopKAssigned(Similarity.loadIvfAssigned(s, s"$wd/v2", cents),
         col("vec_id") % 50 === 0, 5, cents, nprobe = 8)
-        // grouping-free re-aggregate of the 1-row audit — the structurally
-        // bounded scalar-build shape the no-cartesian audit admits
-        .crossJoin(broadcast(audit.agg(
-          max(col("n_deleted")).as("n_deleted"),
-          max(col("n_kept")).as("n_kept"),
-          max(col("del_fp_sum")).as("del_fp_sum"))))
+        .transform(withDeleteAudit(audit))
         .orderBy(col("query_id"), col("rank"))
     },
     // Retrain-and-rewrite for a drifted quantizer: train on the even half,
@@ -807,7 +818,7 @@ object SparkEntry {
       val half = emb.filter(col("vec_id") % 2 === 0)
       val batch = emb.filter(col("vec_id") % 2 === 1)
       val cents = Similarity.kmeansCentroids(half, numCells = 8, iters = 2)
-      val wd = s"${graft.streaming.PersistPipeline.workRoot}/annret-${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+      val wd = workDir("annret", dir)
       // the index (centroids + stats) and assigned-corpus halves of the
       // v1 build write disjoint files from the same inputs — overlapped
       // (guide §2.6), each thread recomputing its own half-scan (the r17
@@ -1172,7 +1183,7 @@ object SparkEntry {
     // postings + doclen once, persist to parquet, reload, serve — the
     // brute-force corpus oracle gates the whole store→load→serve path.
     "q_bm25_stored" -> { (s, dir) =>
-      val wd = s"${graft.streaming.PersistPipeline.workRoot}/bm25-${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+      val wd = workDir("bm25", dir)
       TextAnalysis.saveBm25Index(s, wd, Tables(s, dir).documents)
       val (postings, doclen) = TextAnalysis.loadBm25Index(s, wd)
       // the stored 1-row stats sidecar feeds N/avg-dl — its values are
@@ -1189,7 +1200,7 @@ object SparkEntry {
     // corpus — the oracle replays the survivors' BM25 hash-exactly plus
     // the Σ h60(doc_id) mod 1000003 erasure fingerprint.
     "q_bm25_delete" -> { (s, dir) =>
-      val wd = s"${graft.streaming.PersistPipeline.workRoot}/bm25del-${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+      val wd = workDir("bm25del", dir)
       TextAnalysis.saveBm25Index(s, s"$wd/v1", Tables(s, dir).documents)
       val audit = TextAnalysis.deleteFromBm25Index(
         s, s"$wd/v1", s"$wd/v2", col("doc_id") % 7 === 3)
@@ -1197,12 +1208,7 @@ object SparkEntry {
       // v2's rewritten stats sidecar (survivor N/avg-dl) gates the serve
       TextAnalysis.bm25TopKFromIndex(postings, doclen, Bm25Terms, k = 25,
         stats = TextAnalysis.loadBm25Stats(s, s"$wd/v2"))
-        // grouping-free re-aggregate of the 1-row audit — the structurally
-        // bounded scalar-build shape the no-cartesian audit admits
-        .crossJoin(broadcast(audit.agg(
-          max(col("n_deleted")).as("n_deleted"),
-          max(col("n_kept")).as("n_kept"),
-          max(col("del_fp_sum")).as("del_fp_sum"))))
+        .transform(withDeleteAudit(audit))
         .orderBy(col("score").desc, col("doc_id"))
     },
     // Batch retrieval: top-10 per query for a table of term-bag queries,
@@ -1218,7 +1224,7 @@ object SparkEntry {
     // construction, so the q_bm25_multi oracle replays it verbatim.
     "q_bm25_multi_stored" -> { (s, dir) =>
       import s.implicits._
-      val wd = s"${graft.streaming.PersistPipeline.workRoot}/bm25m-${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+      val wd = workDir("bm25m", dir)
       TextAnalysis.saveBm25Index(s, wd, Tables(s, dir).documents)
       val (postings, doclen) = TextAnalysis.loadBm25Index(s, wd)
       val qs = Bm25Queries.toDF("query_id", "terms")
@@ -1264,7 +1270,7 @@ object SparkEntry {
     // (term buckets pruned, nothing re-tokenized) — identical occurrences
     // and ranking, so the q_phrase_bm25 oracle replays it verbatim.
     "q_phrase_stored" -> { (s, dir) =>
-      val wd = s"${graft.streaming.PersistPipeline.workRoot}/bm25p-${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+      val wd = workDir("bm25p", dir)
       TextAnalysis.saveBm25Positional(s, wd, Tables(s, dir).documents)
       val (postPos, doclen) = TextAnalysis.loadBm25Positional(s, wd)
       TextAnalysis.phraseTopKFromIndex(postPos, doclen,
@@ -1277,7 +1283,7 @@ object SparkEntry {
     // the served phrase ranking is identical to the one-shot build and
     // the q_phrase_stored oracle replays it verbatim.
     "q_phrase_append" -> { (s, dir) =>
-      val wd = s"${graft.streaming.PersistPipeline.workRoot}/bm25pa-${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+      val wd = workDir("bm25pa", dir)
       // appends accrete across process runs — reset the store so the
       // query is idempotent (the batch-id-idempotence contract, spelled
       // as a fresh store per invocation)
@@ -1300,7 +1306,7 @@ object SparkEntry {
     // ranking hash-exactly plus the Σ h60(doc_id) mod 1000003
     // erasure fingerprint.
     "q_phrase_delete" -> { (s, dir) =>
-      val wd = s"${graft.streaming.PersistPipeline.workRoot}/bm25pd-${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+      val wd = workDir("bm25pd", dir)
       TextAnalysis.saveBm25Positional(s, s"$wd/v1", Tables(s, dir).documents)
       val audit = TextAnalysis.deleteFromBm25Positional(
         s, s"$wd/v1", s"$wd/v2", col("doc_id") % 7 === 3)
@@ -1308,12 +1314,7 @@ object SparkEntry {
       TextAnalysis.phraseTopKFromIndex(postPos, doclen,
         Seq("stream", "window"), k = 20,
         stats = TextAnalysis.loadBm25Stats(s, s"$wd/v2"))
-        // grouping-free re-aggregate of the 1-row audit — the structurally
-        // bounded scalar-build shape the no-cartesian audit admits
-        .crossJoin(broadcast(audit.agg(
-          max(col("n_deleted")).as("n_deleted"),
-          max(col("n_kept")).as("n_kept"),
-          max(col("del_fp_sum")).as("del_fp_sum"))))
+        .transform(withDeleteAudit(audit))
     },
     // Per-source bigram type/token diversity — the templated-source flag.
     "q_ngram_diversity" -> ((s, dir) =>
@@ -1559,7 +1560,7 @@ object SparkEntry {
       val books = Similarity.pqCodebooks(
         Similarity.pqTrainSet(emb, 0.3), m = 8, ksub = 16, iters = 2)
       pqCodesStash = Some(books)
-      val wd = s"${graft.streaming.PersistPipeline.workRoot}/pqcodes-${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+      val wd = workDir("pqcodes", dir)
       Similarity.savePqBooks(s, wd, books)
       Similarity.savePqCodes(s, wd,
         Similarity.encodePqCodes(emb, books, cellBits = 4), books, cellBits = 4)
@@ -1587,7 +1588,7 @@ object SparkEntry {
       val books = Similarity.pqCodebooks(
         Similarity.pqTrainSet(emb, 0.3), m = 8, ksub = 16, iters = 2)
       pqDelStash = Some(books)
-      val wd = s"${graft.streaming.PersistPipeline.workRoot}/pqdel-${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+      val wd = workDir("pqdel", dir)
       Similarity.savePqBooks(s, s"$wd/v1", books)
       Similarity.savePqCodes(s, s"$wd/v1",
         Similarity.encodePqCodes(emb, books, cellBits = 4), books, cellBits = 4)
@@ -1597,12 +1598,7 @@ object SparkEntry {
       Similarity.pqTopKWithCodes(codes, emb.filter(col("vec_id") % 5 =!= 2),
         col("vec_id") % 50 === 0, k = 5,
         books, cellBits = storedCellBits, rerank = 32)
-        // grouping-free re-aggregate of the 1-row audit — the structurally
-        // bounded scalar-build shape the no-cartesian audit admits
-        .crossJoin(broadcast(audit.agg(
-          max(col("n_deleted")).as("n_deleted"),
-          max(col("n_kept")).as("n_kept"),
-          max(col("del_fp_sum")).as("del_fp_sum"))))
+        .transform(withDeleteAudit(audit))
         .orderBy(col("query_id"), col("rank"))
     },
     // Retrain-and-rewrite for a drifted PQ codebook (q_ivf_retrain's PQ
@@ -1619,7 +1615,7 @@ object SparkEntry {
       val batch = emb.filter(col("vec_id") % 2 === 1)
       val books = Similarity.pqCodebooks(
         Similarity.pqTrainSet(half, 0.3), m = 8, ksub = 16, iters = 2)
-      val wd = s"${graft.streaming.PersistPipeline.workRoot}/pqret-${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+      val wd = workDir("pqret", dir)
       // overlapped v1 build and overlapped accretion/stats-merge, the
       // q_ivf_retrain shape: books+sub_stats vs codes+meta write disjoint
       // files, and the batch append touches only code files while the

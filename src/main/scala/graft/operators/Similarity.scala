@@ -297,19 +297,6 @@ object Similarity {
     if (n == 0) v else v.map(_ / n)
   }
 
-  /** Scored (cosine ∝ dot against unit centroids) struct array.
-    * (Retained for the specs that prove [[NearestCellScore]]/[[TopCells]]
-    * equivalent; the operators assign via [[bestCell]] and probe via
-    * [[topCells]] — compact reference-object codegen loops instead of
-    * numCells inline literal vectors whose source changed with every
-    * centroid set, defeating the codegen cache on each kmeans iteration /
-    * retrain and riding the C2 JIT cliff at ≥100 centroids.)
-    */
-  private[operators] def cellScores(emb: Column, cents: Array[Array[Double]]): Column =
-    array(cents.zipWithIndex.map { case (c, i) =>
-      struct(dot(typedLit(c.toSeq), emb).as("s"), lit(i).as("i"))
-    }: _*)
-
   /** Winning (s: dot, i: cell) struct — `array_max(cellScores(…))` as one
     * constant-carrying codegen loop (bit-exact contract in
     * [[graft.functions.expressions.NearestCellScore]]).
@@ -539,16 +526,17 @@ object Similarity {
       maxBroadcastProbes: Int = 4096): DataFrame =
     ivfTopKAssignedWith(assigned,
       assigned.filter(queryPred)
-        .select(col("vec_id").as("query_id"), col("embedding"), col("nrm")),
+        .select(col("vec_id").as("query_id"), col("embedding")),
       k, cents, nprobe, broadcastQueries, maxCellSize, maxBroadcastProbes)
 
   /** [[ivfTopKAssigned]] against a CALLER-SUPPLIED query frame
-    * `(query_id, embedding[, nrm])` — the real service shape: a query
+    * `(query_id, embedding)` — the real service shape: a query
     * batch arrives with its vectors in hand, so nothing scans the store
     * to look them up and the only store I/O left is the probed-cell
     * corpus read. `query_id` shares the corpus `vec_id` namespace for
     * the self-exclusion filter (an id absent from the corpus simply
-    * never matches it). Missing `nrm` is derived per row.
+    * never matches it). The query-side `nrm` is derived per row from the
+    * embedding — the same `norm(embedding)` the store's `nrm` holds.
     *
     * `excludeSelf = false` disables the id-based self-exclusion — the
     * EXTERNAL-query shape, where query ids are request-local (batch
@@ -572,10 +560,7 @@ object Similarity {
     val corpus = assigned
       .select(col("vec_id").as("neighbor_id"), col("cell"),
         col("embedding").as("emb_n"), col("nrm").as("nrm_n"))
-    val qv =
-      if (queryVecs.columns.contains("nrm")) queryVecs
-      else queryVecs.withColumn("nrm", norm(col("embedding")))
-    val queries = qv
+    val queries = withNorm(queryVecs)
       .select(col("query_id"),
         explode(topCells(col("embedding"), cents, nprobe)).as("cell"),
         col("embedding").as("emb_q"), col("nrm").as("nrm_q"))
@@ -657,19 +642,6 @@ object Similarity {
     books
   }
 
-  /** Nearest codebook entry by L2 over the subvector:
-    * argmin ‖v−c‖² = argmax(dot(c,v) − ‖c‖²/2); ties to the larger code.
-    * (Retained for the spec that proves [[NearestCodes]] equivalent; the
-    * operators all assign through [[nearestCodesCol]] — one compact
-    * codegen loop instead of m·ksub inline struct trees whose scalar
-    * bias literals defeated the codegen cache on every fresh codebook.)
-    */
-  private[operators] def nearestCode(book: Array[Array[Double]], v: Column): Column =
-    array_max(array(book.zipWithIndex.map { case (c, i) =>
-      struct((dot(typedLit(c.toSeq), v) - lit(0.5 * c.map(x => x * x).sum)).as("s"),
-        lit(i).as("i"))
-    }: _*)).getField("i")
-
   /** All m PQ codes of a full embedding in one expression —
     * [[graft.functions.expressions.NearestCodes]] (bit-exact contract in
     * its scaladoc: DotFold order, same bias, ties to the larger code).
@@ -691,18 +663,6 @@ object Similarity {
         org.apache.spark.sql.graft.ColumnBridge.expression(emb),
         org.apache.spark.sql.graft.ColumnBridge.expression(codes)))
 
-  /** The literal-table ADC chain [[adcScore]] replaces — retained for the
-    * spec that proves the fused expression bit-identical.
-    */
-  private[operators] def adcScoreLegacy(
-      books: Array[Array[Array[Double]]], emb: Column, codes: Column): Column = {
-    val sub = Dim / books.length
-    books.indices.map { s =>
-      dot(slice(emb, s * sub + 1, sub),
-        element_at(typedLit(books(s).map(_.toSeq).toSeq), codes(s) + 1))
-    }.reduce(_ + _)
-  }
-
   /** PQ encode: the m codes per vector — m bytes of payload per row
     * against 4·Dim for float32 (32× at m=8, Dim=64). This is the table a
     * 100 TB ANN deployment materializes once and scans instead of the
@@ -713,17 +673,6 @@ object Similarity {
     embeddings.select(col("vec_id"),
       nearestCodesCol(books, col("embedding")).as("codes"))
 
-  /** IVF-PQ top-k: SRP coarse cells block the candidates (as [[ivfTopK]]),
-    * but the candidate side carries ONLY (cell, vec_id, codes) — the
-    * 32×-smaller PQ representation, which is the actual scan/IO win at
-    * 100 TB — and is scored by asymmetric distance (ADC):
-    * adc = Σ_s dot(q_s, books(s)(code_s)). The `rerank` best candidates
-    * per query then join back to the full vectors for exact cosine — the
-    * standard two-stage recall repair, a k-bounded join.
-    *
-    * (A real deployment materializes [[pqEncode]] once; here the codes
-    * are computed inline so the operator is self-contained.)
-    */
   /** Deterministic hash-gate training sample for PQ/IVF codebook training:
     * codebook quality needs a sample, not the corpus — the gate keeps
     * training reproducible while the Lloyd passes scan trainFrac of the
@@ -743,6 +692,17 @@ object Similarity {
     }
   }
 
+  /** IVF-PQ top-k: SRP coarse cells block the candidates (as [[ivfTopK]]),
+    * but the candidate side carries ONLY (cell, vec_id, codes) — the
+    * 32×-smaller PQ representation, which is the actual scan/IO win at
+    * 100 TB — and is scored by asymmetric distance (ADC):
+    * adc = Σ_s dot(q_s, books(s)(code_s)). The `rerank` best candidates
+    * per query then join back to the full vectors for exact cosine — the
+    * standard two-stage recall repair, a k-bounded join.
+    *
+    * (A real deployment materializes [[pqEncode]] once; here the codes
+    * are computed inline so the operator is self-contained.)
+    */
   def pqTopK(
       embeddings: DataFrame,
       queryPred: Column,
@@ -776,8 +736,6 @@ object Similarity {
       broadcastQueries: Boolean = true,
       maxBroadcastProbes: Int = 4096): DataFrame = {
     require(rerank >= k, "rerank must be at least k")
-    val m = books.length
-    val sub = Dim / m
     val corpus = embeddings.select(col("vec_id").as("neighbor_id"),
       srpCode(col("embedding"), 0, cellBits).as("cell"),
       nearestCodesCol(books, col("embedding")).as("codes"))
@@ -881,8 +839,6 @@ object Similarity {
       maxBroadcastProbes: Int = 4096,
       excludeSelf: Boolean = true): DataFrame = {
     require(rerank >= k, "rerank must be at least k")
-    val m = books.length
-    val sub = Dim / m
     val corpus = codes.select(col("vec_id").as("neighbor_id"),
       col("cell"), col("codes"))
     val queries = withNorm(queryVecs)

@@ -849,43 +849,45 @@ object TextAnalysis {
     * satur_ppm·idf_ppm ≤ 2.2·10^6 · 6.6·10^15 needs the DECIMAL cast it
     * gets before the final div.
     *
-    * Scale shape: document length dl = size(tokens) is a narrow per-row
-    * projection (no explode shuffle) checkpointed once — corpus stats N/A
-    * and the per-doc join both read the pinned N-row (doc_id, dl) table,
-    * not a re-tokenize. The tf table explodes tokens but filters to the
-    * query terms BEFORE the shuffle, so only matching postings move; df
-    * broadcasts as a |terms|-row table and the corpus stats (folded once
-    * from the pinned doclen) ride as literals. Top-k
-    * is TakeOrdered (distributed heap, never a global sort), ties broken
-    * by doc_id. The checkpoint is released before returning; the ≤ k-row
-    * result is eagerly materialized first.
+    * Scale shape: the tf table is built the way the stored postings are
+    * ([[tokenRows]]): document length dl = size(tokens) rides every
+    * posting row, attached before the explode, so scoring joins no
+    * doclen table on doc_id. The explode filters to the query terms
+    * BEFORE the shuffle, so only matching postings move; df broadcasts
+    * as a |terms|-row table, and the corpus stats N/A fold from the
+    * narrow (doc_id, dl) projection in one shuffle-free job and ride as
+    * literals. Top-k is TakeOrdered (distributed heap, never a global
+    * sort), ties broken by doc_id. The tf checkpoint is released before
+    * returning; the ≤ k-row result is eagerly materialized first.
     */
   def bm25TopK(docs: DataFrame, terms: Seq[String], k: Int): DataFrame = {
     require(terms.nonEmpty, "terms must be non-empty")
     require(k > 0, "k must be positive")
-    val dl = docLengths(docs)
-    val st = Bm25Stats.of(dl)
+    val st = Bm25Stats.of(docLengthsPlan(docs))
     // pinned: df derivation and scoring both read the tf table — without
     // the pin each reference re-tokenizes the corpus (the bigramScores
     // lesson: identical agg subtrees get zero ReusedExchange)
-    val tf = Pins.pin(docs
-      .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
-      .filter(col("tok").isin(terms: _*))
-      .groupBy(col("doc_id"), col("tok"))
-      .agg(count(lit(1)).as("tf")))
+    val tf = Pins.pin(postingsOf(
+      tokenRows(docs).filter(col("tok").isin(terms: _*)), positional = false))
+    // eager pin: consume the tf checkpoint, then release it
+    val out = Pins.pin(scoreTopK(tf, k, st))
+    Pins.release(tf)
+    out
+  }
+
+  /** The scoring tail [[bm25TopK]] and [[bm25TopKFromIndex]] share: Σ w
+    * per document over a (doc_id, tok, tf, dl) postings table already
+    * restricted to the query terms, against the corpus statistics `st`,
+    * top-k by (score desc, doc_id).
+    */
+  private def scoreTopK(tf: DataFrame, k: Int, st: Bm25Stats): DataFrame = {
     val dfreq = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    val out = Pins.pin(tf
-      .join(dl, Seq("doc_id"))
-      .join(broadcast(dfreq), Seq("tok"))
+    tf.join(broadcast(dfreq), Seq("tok"))
       .select(col("doc_id"), bm25Weight(st).as("w"))
       .groupBy(col("doc_id"))
       .agg(sum(col("w")).as("score"), count(lit(1)).as("n_hit"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(k)
-    ) // eager pin: consume the dl/tf checkpoints, then release them
-    Pins.release(dl)
-    Pins.release(tf)
-    out
   }
 
   /** Phrase-filtered BM25 — the positional-index extension every serving
@@ -902,7 +904,8 @@ object TextAnalysis {
     * Scale shape: the postings table gains a sorted per-(doc, term)
     * position list — the positional-postings layout, O(tf) ints per
     * posting, built in the SAME one explode + one keyed aggregation as
-    * the tf table (positions ride the aggregation; no extra shuffle).
+    * the tf table (positions and dl ride the aggregation; no extra
+    * shuffle, no doclen join).
     * The phrase check runs per candidate document (those containing ALL
     * distinct terms — a |terms|-way within-doc check, no join fan-out),
     * and the final top-k is a bounded sort over phrase-matching docs.
@@ -911,30 +914,25 @@ object TextAnalysis {
     require(phrase.size >= 2, "a phrase needs at least two terms")
     require(k > 0, "k must be positive")
     val terms = phrase.distinct
-    val dl = docLengths(docs)
+    val st = Bm25Stats.of(docLengthsPlan(docs))
     // pinned: the df table, the phrase map, and the scorer all read the
     // positional postings — unpinned, each reference would re-tokenize
-    val post = Pins.pin(docs
-      .select(col("doc_id"), posexplode(tokens(col("text"))).as(Seq("pos", "tok")))
-      .filter(col("tok").isin(terms: _*))
-      .groupBy(col("doc_id"), col("tok"))
-      .agg(count(lit(1)).as("tf"), sort_array(collect_list(col("pos"))).as("ps")))
-    val out = scorePhrase(post, dl, phrase, k, Bm25Stats.of(dl))
-    Pins.release(dl)
+    val post = Pins.pin(postingsOf(
+      tokenRows(docs).filter(col("tok").isin(terms: _*)), positional = true))
+    val out = scorePhrase(post, phrase, k, st)
     Pins.release(post)
     out
   }
 
   /** The phrase-match + score tail [[phraseTopK]] and
-    * [[phraseTopKFromIndex]] share, over a (doc_id, tok, tf, ps)
+    * [[phraseTopKFromIndex]] share, over a (doc_id, tok, tf, ps, dl)
     * positional-postings table already restricted to the phrase's
     * distinct terms, scored against the corpus statistics `st`. Inputs
     * arrive pinned; callers release after the returned frame's eager
     * pin.
     */
   private def scorePhrase(
-      post: DataFrame, dl: DataFrame, phrase: Seq[String], k: Int,
-      st: Bm25Stats): DataFrame = {
+      post: DataFrame, phrase: Seq[String], k: Int, st: Bm25Stats): DataFrame = {
     val terms = phrase.distinct
     val dfreq = post.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     // per-doc term→positions map; docs missing any distinct term cannot match
@@ -951,10 +949,7 @@ object TextAnalysis {
     val hits = pmap
       .select(col("doc_id"), phraseCount.as("n_phrase"))
       .filter(col("n_phrase") >= 1L)
-    val scored = (if (post.columns.contains("dl"))
-        post.select(col("doc_id"), col("tok"), col("tf"), col("dl"))
-      else post.select(col("doc_id"), col("tok"), col("tf"))
-        .join(dl, Seq("doc_id")))
+    val scored = post.select(col("doc_id"), col("tok"), col("tf"), col("dl"))
       .join(broadcast(dfreq), Seq("tok"))
       .select(col("doc_id"), bm25Weight(st).as("w"))
       .groupBy(col("doc_id"))
@@ -966,18 +961,6 @@ object TextAnalysis {
       .limit(k)
     ) // eager pin: the caller releases its input pins
   }
-
-  /** FULL positional postings (doc_id, tok, tf, sorted ps) — the
-    * Lucene-layout store that makes [[phraseTopKFromIndex]] possible:
-    * unlike the tf-only [[buildBm25Index]] postings, positions ride the
-    * same one-explode one-aggregation build (O(tf) ints per posting),
-    * paid once per corpus version instead of per phrase query.
-    */
-  def buildBm25Positional(docs: DataFrame): DataFrame =
-    docs
-      .select(col("doc_id"), posexplode(tokens(col("text"))).as(Seq("pos", "tok")))
-      .groupBy(col("doc_id"), col("tok"))
-      .agg(count(lit(1)).as("tf"), sort_array(collect_list(col("pos"))).as("ps"))
 
   /** [[phraseTopK]] served from a stored positional index — identical
     * phrase occurrences and ranking by construction (same positions,
@@ -992,14 +975,8 @@ object TextAnalysis {
     require(k > 0, "k must be positive")
     val terms = phrase.distinct
     val st = stats.getOrElse(Bm25Stats.of(doclen))
-    // same pin discipline as bm25PerQueryFromIndex: doclen materializes
-    // only when the serve will join it
-    val needDl = !postingsPos.columns.contains("dl")
-    val dl = if (needDl) Pins.pin(doclen.select(col("doc_id"), col("dl")))
-      else doclen
     val post = Pins.pin(probedPostings(postingsPos, terms, "ps"))
-    val out = scorePhrase(post, dl, phrase, k, st)
-    if (needDl) Pins.release(dl)
+    val out = scorePhrase(post, phrase, k, st)
     Pins.release(post)
     out
   }
@@ -1234,55 +1211,57 @@ object TextAnalysis {
     out
   }
 
-  /** Checkpointed (doc_id, dl) table — one tokenize pass feeds both the
-    * corpus stats and the per-doc join without a re-tokenize.
-    */
-  private def docLengths(docs: DataFrame): DataFrame =
-    Pins.pin(docLengthsPlan(docs))
-
-  /** The unpinned (doc_id, dl) projection. The store writers use this
-    * directly: their stats row now folds either from the just-written
-    * doclen file (save/delete — correct by construction) or from a
-    * recompute of this narrow plan (append — the accreted doclen dir
-    * can't isolate the new batch), so nothing reads the frame twice and
-    * the per-call localCheckpoint job the pin paid buys nothing (the
-    * r17 pin-vs-recompute lesson: measure before pinning a cheap
+  /** The unpinned (doc_id, dl) projection — the doclen rows the store
+    * writers persist and the one narrow fold every corpus statistic
+    * comes from ([[Bm25Stats.of]]). The store's stats row folds either
+    * from the just-written doclen file (save/delete — correct by
+    * construction) or from a recompute of this narrow plan (append —
+    * the accreted doclen dir can't isolate the new batch), and the
+    * corpus forms fold it once per call; nothing reads the frame twice,
+    * so a pin's localCheckpoint job would buy nothing (the r17
+    * pin-vs-recompute lesson: measure before pinning a cheap
     * single-pass recompute).
     */
   private def docLengthsPlan(docs: DataFrame): DataFrame = docs
     .select(col("doc_id"), tokens(col("text")).as("toks"))
     .select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
 
+  /** One row per token occurrence, (doc_id, dl, pos, tok), with the
+    * document length dl = size(toks) attached BEFORE the explode — the
+    * row shape every BM25 postings table aggregates from, stored
+    * ([[bucketedPostingsOnePass]]) or per call (the corpus forms), so
+    * no build and no serve joins a doclen table back on doc_id.
+    * `tokens(text)` materializes in its own projection (the shingleSets
+    * HOF rule): `size` and the generator both reference it, and
+    * inlining would tokenize twice per row.
+    */
+  private def tokenRows(docs: DataFrame): DataFrame = docs
+    .select(col("doc_id"), tokens(col("text")).as("toks"))
+    .select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
+      posexplode(col("toks")).as(Seq("pos", "tok")))
+
+  /** [[tokenRows]] aggregated to the one postings row shape,
+    * (doc_id, tok, `keys`, tf[, sorted ps], dl), grouped by doc_id, tok
+    * and the caller's extra `keys`.
+    */
+  private def postingsOf(rows: DataFrame, positional: Boolean, keys: Column*): DataFrame =
+    rows.groupBy(Seq(col("doc_id"), col("tok")) ++ keys: _*).agg(count(lit(1)).as("tf"),
+      (if (positional) Seq(sort_array(collect_list(col("pos"))).as("ps")) else Nil) :+
+        max(col("dl")).as("dl"): _*)
+
   // ------------------------------------------------- BM25 index lifecycle
 
-  /** The persistent lexical-retrieval index: (tok, doc_id, tf) postings
-    * plus the (doc_id, dl) length table — together the COMPLETE state
-    * the BM25 scorer needs (df = postings per tok, N/A from dl), and the
-    * simplest possible mergeable state: disjoint document batches merge
-    * by plain UNION, since each document's postings and length live in
-    * exactly one batch. The lexical twin of [[Similarity.saveIvfIndex]]:
-    * build once, persist, and every later query job serves from the
-    * stored tables without re-tokenizing the corpus — the latency story
-    * changes from corpus-scan to postings-lookup. The dl table keeps
-    * zero-token documents (they count toward N and the average), so
-    * serving is EXACTLY [[bm25TopK]] on the original corpus.
-    *
-    * The returned doclen table is an eager localCheckpoint (one tokenize
-    * pass feeds both its uses). Callers should free its storage blocks
-    * promptly via [[Pins.release]] once consumed ([[saveBm25Index]]
-    * does); a caller that merely drops the reference still gets the
-    * blocks back, but only when the ContextCleaner sees the RDD become
-    * unreachable — driver-GC-paced, not prompt. (`Dataset.unpersist` is
-    * NOT a release here: it is a CacheManager lookup and a checkpoint
-    * never registers there.)
-    */
-  def buildBm25Index(docs: DataFrame): (DataFrame, DataFrame) = {
-    val postings = docs
-      .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
-      .groupBy(col("doc_id"), col("tok"))
-      .agg(count(lit(1)).as("tf"))
-    (postings, docLengths(docs))
-  }
+  // The persistent lexical-retrieval index: (doc_id, tok, tf[, ps], dl)
+  // postings plus the (doc_id, dl) length table — together the COMPLETE
+  // state the BM25 scorer needs (df = postings per tok, N/A from dl), and
+  // the simplest possible mergeable state: disjoint document batches
+  // merge by plain UNION, since each document's postings and length live
+  // in exactly one batch. The lexical twin of [[Similarity.saveIvfIndex]]:
+  // build once, persist, and every later query job serves from the
+  // stored tables without re-tokenizing the corpus — the latency story
+  // changes from corpus-scan to postings-lookup. The dl table keeps
+  // zero-token documents (they count toward N and the average), so
+  // serving is EXACTLY [[bm25TopK]] on the original corpus.
 
   /** Postings-store bucket count: `tok_bucket = h60(tok) % Bm25Buckets`
     * is the store's PARTITION column, fixed so a serve derives a term's
@@ -1302,8 +1281,8 @@ object TextAnalysis {
     * (groupBy(doc_id, tok) shuffle + doc_id join shuffle +
     * (tok_bucket, tok) write shuffle):
     *
-    *   - `dl` is attached INLINE before the explode (`size(toks)`, the
-    *     value docLengths computes), so the corpus-sized doc_id join
+    *   - `dl` is attached INLINE before the explode ([[tokenRows]]: the
+    *     value docLengthsPlan computes), so the corpus-sized doc_id join
     *     disappears — the build-time denormalization the Lucene-norms
     *     layout pays is now a projection, not an exchange;
     *   - the explode repartitions by `tok` FIRST; `tok ⊂ {doc_id, tok}`
@@ -1337,32 +1316,16 @@ object TextAnalysis {
     * `graft.bm25.build.salt` (at 100 TB raise it toward the cluster's
     * task count / expected max postings per task; it costs nothing when
     * tokens are cold — same exchange, same bytes, same file count).
-    *
-    * `tokens(text)` materializes in its own projection (the shingleSets
-    * HOF rule): `size` and the generator both reference it, and inlining
-    * would tokenize twice per row.
     */
   private[operators] def bucketedPostingsOnePass(
       docs: DataFrame, positional: Boolean): DataFrame = {
     val salt = docs.sparkSession.conf
       .getOption("graft.bm25.build.salt").map(_.toInt).getOrElse(16)
     require(salt >= 1, "graft.bm25.build.salt must be >= 1")
-    val ex = docs
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
-      .select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
-        posexplode(col("toks")).as(Seq("pos", "tok")))
+    val ex = tokenRows(docs)
       .withColumn("slt", pmod(xxhash64(col("doc_id")), lit(salt.toLong)))
       .repartition(col("tok"), col("slt"))
-    val agg =
-      if (positional)
-        ex.groupBy(col("doc_id"), col("tok"), col("slt"))
-          .agg(count(lit(1)).as("tf"),
-            sort_array(collect_list(col("pos"))).as("ps"),
-            max(col("dl")).as("dl"))
-      else
-        ex.groupBy(col("doc_id"), col("tok"), col("slt"))
-          .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
-    agg
+    postingsOf(ex, positional, col("slt"))
       .drop("slt")
       .withColumn("tok_bucket", pmod(h60(col("tok")), lit(Bm25Buckets.toLong)))
       .sortWithinPartitions(col("tok_bucket"), col("tok"))
@@ -1419,7 +1382,7 @@ object TextAnalysis {
   private val doclenSchema =
     org.apache.spark.sql.types.StructType.fromDDL("doc_id BIGINT, dl BIGINT")
 
-  /** Persist [[buildBm25Index]] as `<dir>/postings` + `<dir>/doclen` +
+  /** Persist a corpus's BM25 index as `<dir>/postings` + `<dir>/doclen` +
     * `<dir>/stats` parquet (BIGINT/VARCHAR only — trivially
     * engine-portable) plus the `<dir>/postings_meta` stamp: postings
     * PARTITIONED BY `tok_bucket` with tok-sorted files (the
@@ -1439,7 +1402,11 @@ object TextAnalysis {
       spark: org.apache.spark.sql.SparkSession, dir: String, docs: DataFrame): Unit =
     saveStore(spark, dir, docs, TermPostings)
 
-  /** Persist [[buildBm25Positional]]'s positional postings as
+  /** Persist a corpus's FULL positional postings (doc_id, tok, tf,
+    * sorted ps, dl) — the Lucene-layout store that makes
+    * [[phraseTopKFromIndex]] possible: positions ride the same
+    * one-explode one-aggregation build (O(tf) ints per posting), paid
+    * once per corpus version instead of per phrase query — as
     * `<dir>/postings_pos` in the same tok-bucketed, dl-denormalized
     * layout as [[saveBm25Index]] (plus the shared `<dir>/doclen` and
     * `<dir>/stats`, and the `<dir>/postings_pos_meta` stamp), so phrase
@@ -1806,23 +1773,17 @@ object TextAnalysis {
   }
 
   /** The stored postings rows of `terms` — doc_id, tok, tf, the `extra`
-    * columns, and dl where the postings carry it. On a bucketed store the
-    * terms' `tok_bucket`s (derived driver-side, h60Jvm ≡ h60) go down as
-    * a static PARTITION filter ahead of the residual `tok IN`, so the
-    * scan lists only the probed buckets' directories; in-memory
-    * [[buildBm25Index]] postings carry neither dl nor tok_bucket and
-    * take the plain filter.
+    * columns, and dl. The terms' `tok_bucket`s (derived driver-side,
+    * h60Jvm ≡ h60) go down as a static PARTITION filter ahead of the
+    * residual `tok IN`, so the scan lists only the probed buckets'
+    * directories.
     */
   private def probedPostings(
       postings: DataFrame, terms: Seq[String], extra: String*): DataFrame = {
-    val cols = (Seq("doc_id", "tok", "tf") ++ extra ++
-      Seq("dl").filter(postings.columns.contains)).map(col)
-    if (postings.columns.contains("tok_bucket")) {
-      val buckets = terms.map(t => h60Jvm(t) % Bm25Buckets).distinct
-      postings
-        .filter(col("tok_bucket").isin(buckets: _*) && col("tok").isin(terms: _*))
-        .select(cols: _*)
-    } else postings.filter(col("tok").isin(terms: _*)).select(cols: _*)
+    val buckets = terms.map(t => h60Jvm(t) % Bm25Buckets).distinct
+    postings
+      .filter(col("tok_bucket").isin(buckets: _*) && col("tok").isin(terms: _*))
+      .select((Seq("doc_id", "tok", "tf") ++ extra :+ "dl").map(col): _*)
   }
 
   /** [[bm25TopK]] served from a prebuilt/reloaded index instead of the
@@ -1844,17 +1805,8 @@ object TextAnalysis {
     // folded from doclen (a corpus-table scan per call — fine at test
     // scale, the sidecar is the 100 TB path)
     val st = stats.getOrElse(Bm25Stats.of(doclen))
-    val hasDl = postings.columns.contains("dl")
-    val tf = probedPostings(postings, terms)
-    val dfreq = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    // dl rides the posting rows on a denormalized store — no doclen join
-    (if (hasDl) tf else tf.join(doclen, Seq("doc_id")))
-      .join(broadcast(dfreq), Seq("tok"))
-      .select(col("doc_id"), bm25Weight(st).as("w"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("w")).as("score"), count(lit(1)).as("n_hit"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
+    // dl rides the posting rows — no doclen join
+    scoreTopK(probedPostings(postings, terms), k, st)
   }
 
   /** The per-posting integer BM25 weight (see [[bm25TopK]] scaladoc for
@@ -1918,33 +1870,29 @@ object TextAnalysis {
           .agg(count(lit(1)).as("qtf"))
       else posting.distinct().withColumn("qtf", lit(1L)))
     val terms = qt.select(col("tok")).distinct()
-    val dl = docLengths(docs)
+    val st = Bm25Stats.of(docLengthsPlan(docs))
     // pinned like bm25TopK's tf: df derivation and scoring each reference
     // it, and an unpinned table would re-tokenize the corpus per reference
-    val tf = Pins.pin(docs
-      .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
-      .join(broadcast(terms), Seq("tok"))
-      .groupBy(col("doc_id"), col("tok"))
-      .agg(count(lit(1)).as("tf")))
-    val out = scorePerQuery(tf, dl, qt, k, salts, Bm25Stats.of(dl))
+    val tf = Pins.pin(postingsOf(
+      tokenRows(docs).join(broadcast(terms), Seq("tok")), positional = false))
+    val out = scorePerQuery(tf, qt, k, salts, st)
     Pins.release(qt)
-    Pins.release(dl)
     Pins.release(tf)
     out
   }
 
   /** The scoring tail [[bm25PerQuery]] and [[bm25PerQueryFromIndex]]
-    * share: per-(query, doc) Σ qtf·w over a (doc_id, tok, tf) table, dl
-    * store and qt term bags against the corpus statistics `st`, ranked
-    * by the salted two-stage top-k. All three inputs are
+    * share: per-(query, doc) Σ qtf·w over a (doc_id, tok, tf, dl)
+    * postings table and qt term bags against the corpus statistics `st`,
+    * ranked by the salted two-stage top-k. Both inputs are
     * multi-referenced — callers pass them pinned and release after the
     * returned frame's eager pin.
     */
   private def scorePerQuery(
-      tf: DataFrame, dl: DataFrame, qt: DataFrame, k: Int, salts: Int,
+      tf: DataFrame, qt: DataFrame, k: Int, salts: Int,
       st: Bm25Stats): DataFrame = {
     val dfreq = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    val scored = (if (tf.columns.contains("dl")) tf else tf.join(dl, Seq("doc_id")))
+    val scored = tf
       .join(broadcast(dfreq), Seq("tok"))
       .select(col("tok"), col("doc_id"), bm25Weight(st).as("w"))
       .join(broadcast(qt), Seq("tok"))
@@ -1989,15 +1937,9 @@ object TextAnalysis {
     val termSeq = qt.select(col("tok")).distinct()
       .collect().map(_.getString(0)).toSeq
     val st = stats.getOrElse(Bm25Stats.of(doclen))
-    // doclen is corpus-row-sized: pin (an eager materialization) ONLY
-    // when the serve will join it — a dl-denormalized store never does
-    val needDl = !postings.columns.contains("dl")
-    val dl = if (needDl) Pins.pin(doclen.select(col("doc_id"), col("dl")))
-      else doclen
     val tf = Pins.pin(probedPostings(postings, termSeq))
-    val out = scorePerQuery(tf, dl, qt, k, salts, st)
+    val out = scorePerQuery(tf, qt, k, salts, st)
     Pins.release(qt)
-    if (needDl) Pins.release(dl)
     Pins.release(tf)
     out
   }

@@ -1474,7 +1474,7 @@ class TextOpsSpec extends SparkSpec {
     // legacy shape: one nearestCode struct tree per subspace over a slice
     val legacy = emb.select(col("vec_id"),
       array((0 until books.length).map(s =>
-        Similarity.nearestCode(books(s),
+        LegacyForms.nearestCode(books(s),
           slice(col("embedding"), s * sub + 1, sub))): _*).as("codes"))
       .orderBy("vec_id").select("codes").as[Seq[Int]].collect().toSeq
     val fused = Similarity.pqEncode(emb, books)
@@ -1509,7 +1509,7 @@ class TextOpsSpec extends SparkSpec {
     val cents = Similarity.kmeansCentroids(emb, numCells = 17, iters = 1, salt = "nceq2")
     // argmax struct: same winning (s, i) as array_max over the literal array
     val legacyBest = emb.select(col("vec_id"),
-      array_max(Similarity.cellScores(col("embedding"), cents)).as("best"))
+      array_max(LegacyForms.cellScores(col("embedding"), cents)).as("best"))
       .orderBy("vec_id").select(col("best.s"), col("best.i"))
       .as[(Double, Int)].collect().toSeq
     val fusedBest = emb.select(col("vec_id"),
@@ -1521,7 +1521,7 @@ class TextOpsSpec extends SparkSpec {
     val nprobe = 5
     val legacyProbe = emb.select(col("vec_id"),
       transform(
-        slice(reverse(array_sort(Similarity.cellScores(col("embedding"), cents))),
+        slice(reverse(array_sort(LegacyForms.cellScores(col("embedding"), cents))),
           1, nprobe),
         s => s.getField("i")).as("cells"))
       .orderBy("vec_id").select("cells").as[Seq[Int]].collect().toSeq
@@ -1552,7 +1552,7 @@ class TextOpsSpec extends SparkSpec {
       .select(col("vec_id"), col("embedding"), col("codes"))
     val both = coded.select(
       Similarity.adcScore(books, col("embedding"), col("codes")).as("a"),
-      Similarity.adcScoreLegacy(books, col("embedding"), col("codes")).as("b"))
+      LegacyForms.adcScore(books, col("embedding"), col("codes")).as("b"))
       .select((col("a") === col("b")).as("eq")).as[Boolean].collect()
     assert(both.nonEmpty && both.forall(identity))
   }
@@ -1841,23 +1841,30 @@ class TextOpsSpec extends SparkSpec {
     val wd = java.nio.file.Files.createTempDirectory("bm25onepass").toString
     TextAnalysis.saveBm25Index(spark, s"$wd/tf", d)
     TextAnalysis.saveBm25Positional(spark, s"$wd/pos", d)
-    // legacy semantics: postings joined with (doc_id, dl)
-    val (p, dl) = TextAnalysis.buildBm25Index(d)
-    val wantTf = p.join(dl, Seq("doc_id"))
+    // legacy semantics: the build → join(doclen) chain, spelled out —
+    // postings from a plain explode + groupBy(doc_id, tok), each row
+    // joined with its document's (doc_id, dl)
+    val toks = TextFunctions.tokens(col("text"))
+    val dl = d.select(col("doc_id"), size(toks).cast("long").as("dl"))
+    val built = d
+      .select(col("doc_id"), posexplode(toks).as(Seq("pos", "tok")))
+      .groupBy(col("doc_id"), col("tok"))
+      .agg(count(lit(1)).as("tf"), sort_array(collect_list(col("pos"))).as("ps"))
+      .join(dl, Seq("doc_id"))
+    val wantTf = built
       .select("doc_id", "tok", "tf", "dl")
       .as[(Long, String, Long, Long)].collect().toSet
     val gotTf = spark.read.parquet(s"$wd/tf/postings")
       .select("doc_id", "tok", "tf", "dl")
       .as[(Long, String, Long, Long)].collect().toSet
     assert(gotTf === wantTf)
-    val wantPos = TextAnalysis.buildBm25Positional(d).join(dl, Seq("doc_id"))
+    val wantPos = built
       .select("doc_id", "tok", "tf", "ps", "dl")
       .as[(Long, String, Long, Seq[Int], Long)].collect().toSet
     val gotPos = spark.read.parquet(s"$wd/pos/postings_pos")
       .select("doc_id", "tok", "tf", "ps", "dl")
       .as[(Long, String, Long, Seq[Int], Long)].collect().toSet
     assert(gotPos === wantPos)
-    dl.unpersist(blocking = false)
     // plan contract: the one-pass build moves the corpus through exactly
     // ONE exchange (the tok repartition the aggregation reuses) — the
     // legacy chain paid three (groupBy shuffle + doc_id join shuffle +
@@ -1923,6 +1930,38 @@ class TextOpsSpec extends SparkSpec {
     assert(served === direct)
   }
 
+  test("corpus-form BM25 serves join no doclen table: dl rides the postings rows") {
+    val d = Seq((1L, "x y z x"), (2L, "x q q"), (3L, "p p p"), (4L, "y y q x q"),
+      (5L, ""), (6L, "q x q x"))
+      .toDF("doc_id", "text")
+    val qs = Seq((10L, Seq("x", "q")), (20L, Seq("y", "y", "p")))
+      .toDF("query_id", "terms")
+    // the physical join tree under the audit view (pins are the identity,
+    // so the plan below the would-be checkpoints is visible): every join,
+    // and every join side that is a (doc_id, dl) doclen table
+    def joins(df: => org.apache.spark.sql.DataFrame) = Pins.withAuditView {
+      df.queryExecution.sparkPlan.collect {
+        case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
+      }
+    }
+    def doclenSides(js: Seq[org.apache.spark.sql.execution.joins.BaseJoinExec]) =
+      js.flatMap(_.children).count(_.output.map(_.name) == Seq("doc_id", "dl"))
+    // bm25TopK: the df broadcast (on tok) is its only join
+    val topK = joins(TextAnalysis.bm25TopK(d, Seq("x", "q"), k = 3))
+    assert(doclenSides(topK) == 0 && topK.size == 1, topK.mkString("\n"))
+    // bm25PerQuery: the df broadcast, the qt fan-out and the query-term
+    // semi-join under the tf table, which both of them read (twice in the
+    // tree: the tf pin is the identity here) — all on tok
+    Seq(false, true).foreach { w =>
+      val perQuery = joins(TextAnalysis.bm25PerQuery(d, qs, k = 2, weighted = w))
+      assert(doclenSides(perQuery) == 0 && perQuery.size == 4,
+        s"weighted=$w:\n" + perQuery.mkString("\n"))
+    }
+    // phraseTopK: the df broadcast and the phrase-hits ⋈ scores join
+    val phrase = joins(TextAnalysis.phraseTopK(d, Seq("x", "q"), k = 3))
+    assert(doclenSides(phrase) == 0 && phrase.size == 2, phrase.mkString("\n"))
+  }
+
   test("BM25 index lifecycle: build → save → load → serve equals the corpus scan") {
     val d = Seq((1L, "x y z x"), (2L, "x q q"), (3L, "p p p"), (4L, "y y q"))
       .toDF("doc_id", "text")
@@ -1942,15 +1981,18 @@ class TextOpsSpec extends SparkSpec {
     val plan = servedDf.queryExecution.executedPlan.toString
     assert(plan.matches("(?s).*PartitionFilters: \\[[^\\]]*tok_bucket[^\\]]*\\].*"),
       s"term-bucket filter must reach the postings scan as a partition filter:\n$plan")
-    // the index is union-mergeable over disjoint doc batches: the
-    // concatenated per-batch indexes serve the identical top-k
-    val (p1, l1) = TextAnalysis.buildBm25Index(d.filter(col("doc_id") <= 2))
-    val (p2, l2) = TextAnalysis.buildBm25Index(d.filter(col("doc_id") > 2))
+    // the index is union-mergeable over disjoint doc batches: two stores
+    // saved from disjoint halves, loaded, and concatenated (postings AND
+    // doclen — the corpus stats fold from the merged doclen) serve the
+    // identical top-k
+    TextAnalysis.saveBm25Index(spark, s"$wd/b1", d.filter(col("doc_id") <= 2))
+    TextAnalysis.saveBm25Index(spark, s"$wd/b2", d.filter(col("doc_id") > 2))
+    val (p1, l1) = TextAnalysis.loadBm25Index(spark, s"$wd/b1")
+    val (p2, l2) = TextAnalysis.loadBm25Index(spark, s"$wd/b2")
     val merged = TextAnalysis.bm25TopKFromIndex(
       p1.unionByName(p2), l1.unionByName(l2), Seq("x", "q"), k = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(merged === direct)
-    Seq(l1, l2).foreach(_.unpersist(blocking = false))
     // batch retrieval from the same store: identical per-query ranking to
     // the corpus form (unweighted AND qtf-weighted), term buckets pruned
     val qs = Seq((10L, Seq("x", "q")), (20L, Seq("y", "y", "p")))
